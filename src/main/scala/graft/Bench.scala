@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.tools.OracleDump.jstr
 
 /** Per-round benchmark: one JSON line with total + per-query seconds.
   *
@@ -37,26 +37,13 @@ object Bench {
     n
   }
 
-  /** Bench runs with the determinism sort OFF by default (see
-    * [[Q.determinismSort]]): the noop sink needs no row order, and the
-    * single-reducer sort scaled with egress size — at sf100 it was ~10x
-    * the operator cost on 5M-row outputs. `SPARK_GRAFT_DETSORT=on`
-    * re-enables it for A/B against pre-round-12 artifacts; the artifact
-    * records which discipline ran via `det_sort`. Correctness is
-    * unaffected: [[Verify]] never touches the toggle, so the gate dumps
-    * stay totally ordered. */
-  val DetSort: Boolean = sys.env.get("SPARK_GRAFT_DETSORT").contains("on")
-
   /** Page-cache state of the input files, recorded in the artifact
     * (round-13 verdict task 5: j2 at sf100 measured 177.8 s cold vs
     * 67.1 s warm — a 2.5× swing invisible in the JSON, so cross-round
-    * sf100 deltas were only interpretable by reading prose).
-    * `SPARK_GRAFT_PRETOUCH=on` standardizes the state by sequentially
-    * reading every input byte before the warmup (the artifact then says
-    * "warm" and records the touch cost); `SPARK_GRAFT_CACHE=cold|warm`
-    * asserts a state the harness arranged externally (e.g. after
-    * `echo 3 > drop_caches`); absent both, "unspecified" — the honest
-    * label for whatever the previous run left behind. */
+    * sf100 deltas were only interpretable by reading prose). Every run
+    * standardizes the state by sequentially reading every input byte
+    * before the warmup, so the artifact's `cache` is always "warm" and
+    * `pretouch_sec` records the touch cost. */
   def preTouch(sfDir: String): Double = {
     val t0 = System.nanoTime()
     val buf = new Array[Byte](1 << 20)
@@ -105,28 +92,6 @@ object Bench {
     else "null"
   }
 
-  /** SF-scaled shuffle width (round-10 task: replace the sf10
-    * SPARK_DRIVER_MEM=96g crutch with the real lever). The 119.6M-edge
-    * sf10 graph OOM'd a 16 GB heap at 32 shuffle partitions because 32
-    * concurrent reduce tasks each sorted |E|/32 rows; more, smaller
-    * reduce tasks shrink the per-task working set while AQE coalesces
-    * whatever comes out undersized (shuffle.partitions is only the
-    * INITIAL width — AQE cannot split beyond it, so sizing it UP with
-    * the data is free, sizing it down is not). Heuristic: one initial
-    * partition per 8 MB of source parquet, floored at the core count,
-    * capped at 1024; SPARK_GRAFT_SHUFFLE_PARTITIONS overrides for A/B.
-    * sf0.1/sf1 stay at 32 (unchanged numbers); sf10 lands ~170.
-    */
-  private def sizeOf(f: java.io.File): Long =
-    if (f.isFile) f.length
-    else Option(f.listFiles).map(_.map(sizeOf).sum).getOrElse(0L)
-
-  def scaledShufflePartitions(sfDir: String, cpus: Int): Int =
-    sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").map(_.toInt).getOrElse {
-      val dirBytes = sizeOf(new java.io.File(sfDir))
-      math.max(cpus.toLong, math.min(1024L, dirBytes / (8L << 20) + 1)).toInt
-    }
-
   /** Corpus-size ceiling for documented-negative queries, and the set of
     * them. `e4w_srp_wide` exists as the measured A/B NEGATIVE for e4's
     * adaptive band geometry (fixed (8,2) bands saturate at corpus scale:
@@ -142,55 +107,23 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val shufflePartitions = scaledShufflePartitions(sfDir, cpus.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      // NOTE: pairing the scaled width with a smaller AQE advisory size
-      // (16 MB) was tried here and REGRESSED: the extra in-flight spill
-      // and read-ahead buffers of the finer tasking hard-OOM'd the heap
-      // on x_pagerank3 at sf10 (run 2 of the r10 measurement), where the
-      // default 64 MB advisory ran green. The defaults stay; the real
-      // sf10 memory lever was taking the loop-invariant |E| artifact out
-      // of the unified region (DISK_ONLY in pagerankConverged).
-      // NOTE on scan splits: a split-count floor
-      // (spark.sql.files.minPartitionNum = cpus) was tried here for the
-      // single-file testdata and measurably REGRESSED shuffle-heavy
-      // queries 3-5x at sf1 (a13 0.7->3.6s, x_tokens 0.5->2.9s, A/B via
-      // QueryProbe) while the real fix for the sf1 scan pathology was
-      // row-group-sized writes in tools/ScaleUp (one giant row group made
-      // single-split events scans 27s; 1 MB row groups restore 1.4s on
-      // the SAME single split). Defaults are kept.
-      .config("spark.sql.session.timeZone", "UTC")
-      // bucketed-scan ordering is a SESSION-CONSTRUCTION setting (round-15
-      // advice): a20c's exchange-free as-of plan needs it, and setting it
-      // inside one query builder made every LATER bucketed query's plan
-      // depend on whether a20c ran first. One file per bucket is still
-      // required for Spark to claim the order, so it can never assert an
-      // ordering the files don't have.
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Q.determinismSort = DetSort
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Session.local(cpus, sfDir)
+    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions")
+    // The determinism sort stays OFF here (see [[Q.determinismSort]]):
+    // the noop sink needs no row order, and the single-reducer sort
+    // scaled with egress size — at sf100 it was ~10x the operator cost
+    // on 5M-row outputs. The artifact's `det_sort` records it. Verify
+    // never touches the switch, so the gate dumps stay totally ordered.
+    graft.Q.determinismSort = false
     val codegenErrors = installCodegenErrorCounter()
 
     // cache-state discipline (see preTouch): touch BEFORE the warmup so
-    // the warmup queries run against the state the artifact claims.
-    // DEFAULT ON since round 15 (round-14 verdict task 6: the driver's
-    // root sf0.1 artifact ran cache-unspecified and swung ±22% on page
-    // cache alone, drowning the regression signal); SPARK_GRAFT_PRETOUCH
-    // =off restores the old behavior for cold-cache A/B runs.
-    val preTouchOn = !sys.env.get("SPARK_GRAFT_PRETOUCH").contains("off")
-    val preTouchSec = if (preTouchOn) preTouch(sfDir) else -1.0
-    // validated against the known states: the raw env var is interpolated
-    // into the machine-read JSON artifact, so an arbitrary string (a
-    // quote, a backslash) would corrupt the line
-    val cacheState =
-      sys.env.getOrElse("SPARK_GRAFT_CACHE", if (preTouchOn) "warm" else "unspecified")
-    require(Set("cold", "warm", "unspecified")(cacheState),
-      s"SPARK_GRAFT_CACHE must be cold|warm|unspecified, got '$cacheState'")
+    // the warmup queries run against the state the artifact claims
+    // (round-14 verdict task 6: the root sf0.1 artifact ran
+    // cache-unspecified and swung ±22% on page cache alone, drowning the
+    // regression signal).
+    val preTouchSec = preTouch(sfDir)
 
     // Per-query failures must be FIRST-CLASS in the artifact. The first
     // cut only printed them to stderr and still recorded the elapsed
@@ -217,7 +150,7 @@ object Bench {
       // broadcasts when driver GC collects their references, and a 100 GB
       // heap may not GC for the whole run — accumulated state made
       // identical queries 5-10x slower late in a full-suite run than in
-      // an isolated QueryProbe session (measured at sf1).
+      // an isolated single-query session (measured at sf1).
       spark.catalog.clearCache()
       System.gc()
       dt
@@ -248,7 +181,7 @@ object Bench {
     // documented-negative gating (see LargeSfSkip): default-skip above
     // LargeSfBytes; an explicit allowlist overrides
     val skipped: Set[String] =
-      if (allow.isEmpty && sizeOf(new java.io.File(sfDir)) > LargeSfBytes)
+      if (allow.isEmpty && Session.sizeOf(new java.io.File(sfDir)) > LargeSfBytes)
         LargeSfSkip.filter(SparkEntry.queries.contains)
       else Set.empty
     skipped.foreach(n => System.err.println(
@@ -257,7 +190,7 @@ object Bench {
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => allow.forall(_.contains(n)) && !skipped(n))
     val results = names.map(n => n -> median(n))
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val qs = results.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
     val total = results.map(_._2).sum
     // SURVEY.md §2 reference-parity set (BASELINE.md's <60s envelope was
     // authored for this set) as an EXPLICIT whitelist — prefix filters
@@ -269,25 +202,18 @@ object Bench {
     // artifact says which subset ran.
     val core = coreSurvey2Json(results, queryErrors.keySet.toSet)
     val allowJson = allow
-      .map(_.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]"))
+      .map(_.toSeq.sorted.map(jstr).mkString("[", ",", "]"))
       .getOrElse("null")
     // 1-min load average (this box has noisy neighbors; round-1 runs
     // disagreed 4x — a high loadavg in the artifact explains a slow run)
     val loadavg = try {
       scala.io.Source.fromFile("/proc/loadavg").getLines().next().split(" ")(0)
     } catch { case _: Throwable => "-1" }
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => " "
-        case c => c.toString
-      } + "\""
     val errJson = queryErrors
       .map { case (k, v) => jstr(k) + ":" + jstr(v) }.mkString("{", ",", "}")
     val skippedJson =
-      skipped.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","core_survey2_sec":$core,"iters":$Iters,"det_sort":$DetSort,"cache":"$cacheState","pretouch_sec":$preTouchSec,"codegen_errors":${codegenErrors.get()},"n_query_errors":${queryErrors.size},"errors":$errJson,"loadavg_1m":$loadavg,"shuffle_partitions":$shufflePartitions,"allowlist":$allowJson,"skipped":$skippedJson,"queries":$qs,"sf":"$sfDir"}"""
+      skipped.toSeq.sorted.map(jstr).mkString("[", ",", "]")
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","core_survey2_sec":$core,"iters":$Iters,"det_sort":false,"cache":"warm","pretouch_sec":$preTouchSec,"codegen_errors":${codegenErrors.get()},"n_query_errors":${queryErrors.size},"errors":$errJson,"loadavg_1m":$loadavg,"shuffle_partitions":$shufflePartitions,"allowlist":$allowJson,"skipped":$skippedJson,"queries":$qs,"sf":${jstr(sfDir)}}"""
     // The FULL line prints first — a failed file write (unwritable
     // path, cross-filesystem atomic move) can never lose the stdout
     // artifact of a possibly hours-long run.
@@ -304,7 +230,7 @@ object Bench {
     // line is truncated. The full line stays FIRST and unchanged for
     // consumers that read complete stdout; the trailer is marked
     // "trailer":true so the two are distinguishable.
-    val trailer = s"""{"metric":"total","value":$total,"unit":"sec","core_survey2_sec":$core,"iters":$Iters,"det_sort":$DetSort,"cache":"$cacheState","codegen_errors":${codegenErrors.get()},"n_query_errors":${queryErrors.size},"loadavg_1m":$loadavg,"shuffle_partitions":$shufflePartitions,"n_queries":${results.size},"trailer":true,"sf":"$sfDir"}"""
+    val trailer = s"""{"metric":"total","value":$total,"unit":"sec","core_survey2_sec":$core,"iters":$Iters,"det_sort":false,"cache":"warm","codegen_errors":${codegenErrors.get()},"n_query_errors":${queryErrors.size},"loadavg_1m":$loadavg,"shuffle_partitions":$shufflePartitions,"n_queries":${results.size},"trailer":true,"sf":${jstr(sfDir)}}"""
     println(trailer)
     // The full artifact is ALSO written by Bench ITSELF — to
     // SPARK_GRAFT_BENCH_OUT when set, defaulting to .bench/last.json —

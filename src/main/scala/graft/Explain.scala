@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Plan audit: dumps `explain("formatted")` for representative queries to
@@ -54,24 +53,24 @@ object Explain {
   /** Queries whose semantics become APPROXIMATE past a size tier (the
     * round-15 advice: the oracle dispatches on the same constants, so
     * the in-band gate can't flag it — the docs must). Measured recall
-    * numbers live in SCALING.md and `tools/PairRecallProbe`. */
+    * numbers live in SCALING.md and `tools/Recall`. */
   val approximate: Map[String, String] = {
     val winnow = "past PairGateMinDocs (100k docs) the pair list is " +
       "winnow-fingerprint-gated (MOSS) with exact full-shingle verify — " +
-      "measured 97.3% pair recall at data/sf10 (PairRecallProbe floor 0.95)"
+      "measured 97.3% pair recall at data/sf10 (tools.Recall floor 0.95)"
     Map(
       "d4_ngram_jaccard" -> winnow,
       "d6_jaccard_dfcap" -> ("past PairGateMinDocs the inverted-index df " +
         "cap drops 50 → DfCapLarge=8 (gate-recall trade measured by " +
-        "PairRecallProbe; exact verify unchanged)"),
+        "tools.Recall; exact verify unchanged)"),
       "d12_containment" -> winnow,
       "x_keep_pipeline" -> winnow,
       "x_curation_pipeline" -> winnow,
       "e11_ivf_adc" -> ("past PqArmMaxRows (20k vectors) retrieval is " +
         "IVF-ADC with Lloyd-trained coarse codebook — recall@3 = 1.000 " +
-        "at data/sf10, RecallProbe floor 0.85"),
+        "at data/sf10, tools.Recall floor 0.85"),
       "e13_index_serve" -> ("served from the persisted IVF-PQ index " +
-        "(same trained-arm geometry as e11; RecallProbe floor 0.85)"),
+        "(same trained-arm geometry as e11; tools.Recall floor 0.85)"),
       "x_semdedup" -> ("past PqArmMaxRows clusters come from the " +
         "sqrt(n)-codeword codebook (oracle dispatches on the same " +
         "constant; cell-exact at data/sf10)"))
@@ -79,24 +78,11 @@ object Explain {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // bucketed-scan ordering is a SESSION-CONSTRUCTION setting (round-15
-      // advice): a20c's exchange-free as-of plan needs it, and setting it
-      // inside one query builder made every LATER bucketed query's plan
-      // depend on whether a20c ran first. One file per bucket is still
-      // required for Spark to claim the order, so it can never assert an
-      // ordering the files don't have.
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.ui.enabled", "false")
-      // AQE stays ON for real runs; the audit disables it so the static
-      // plan shows WholeStageCodegen spans and the true Exchange structure
-      // instead of an opaque AdaptiveSparkPlan wrapper.
-      .config("spark.sql.adaptive.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(4, sfDir)
+    // AQE stays ON for real runs; the audit disables it so the static
+    // plan shows WholeStageCodegen spans and the true Exchange structure
+    // instead of an opaque AdaptiveSparkPlan wrapper.
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
 
     val sb = new StringBuilder
     sb.append("# EXPLAIN — physical plan audit\n\n")

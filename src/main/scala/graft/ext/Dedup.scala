@@ -533,7 +533,7 @@ object Dedup {
 
   /** d6's capped-index gate + exact verify at an EXPLICIT cap — one
     * implementation shared by the d6 query body (cap dispatched on
-    * [[PairGateMinDocs]]) and [[graft.tools.PairRecallProbe]], which
+    * [[PairGateMinDocs]]) and [[graft.tools.Recall]], which
     * re-runs it at both caps to measure what the harder
     * [[DfCapLarge]] gate costs in pair recall (the oracle dispatches on
     * the same constants, so in-band correctness can't see that number).

@@ -55,10 +55,11 @@ object Embeddings {
 
   /** Trained-arm re-rank depth: shortlist = the probed candidate mass
     * over this divisor (floored at the label-arm formula). Failure
-    * attribution at data/sf10 (tools/IvfDiag, k=56): the coarse probe
-    * captured 15/15 true neighbors at every width — but their ADC ranks
-    * under the 256-codeword SAMPLED PQ codebook ran 1..1225 of ~14k
-    * probed candidates, so the fixed 48-slot shortlist kept only 8/15.
+    * attribution at data/sf10 (the miss split, now in tools/Recall,
+    * k=56): the coarse probe captured 15/15 true neighbors at every
+    * width — but their ADC ranks under the 256-codeword SAMPLED PQ
+    * codebook ran 1..1225 of ~14k probed candidates, so the fixed
+    * 48-slot shortlist kept only 8/15.
     * The sampled codebook is an honest coarse PRUNER, not a ranker:
     * re-ranking the top quarter of the probed mass (1800 exact cosines
     * per query at sf10 — request-sized) restores the recall the probe
@@ -78,7 +79,7 @@ object Embeddings {
   // oracle-friendly gate geometry, but it has a fixed capacity: at 200k
   // vectors the 8x10-codeword ADC distance is too coarse for any
   // shortlist to retain true neighbors (measured recall@3 = 0.13 at
-  // data/sf10 vs 0.87 at gate — tools/RecallProbe, round 14). Real IVF-PQ
+  // data/sf10 vs 0.87 at gate — tools/Recall, round 14). Real IVF-PQ
   // sizes both codebooks with the corpus: coarse k ~ sqrt(n) (FAISS
   // guidance) and PQ codebooks of 256 codewords per subspace (one byte
   // per code). Past [[PqArmMaxRows]] the e11/e13/e14b family DISPATCHES
@@ -579,7 +580,7 @@ object Embeddings {
   // ~1 s of driver planning/codegen at sf0.1.)
 
   /** Exact-integer ADC distance: sum over subspaces of LUT[m][code[m]]. */
-  private def adcSum(codes: Column, lut: Column): Column =
+  private[graft] def adcSum(codes: Column, lut: Column): Column =
     (0 until PqM).map(m =>
       element_at(lut, concat_ws("_", lit(m), element_at(codes, m + 1))))
       .reduce(_ + _)

@@ -49,24 +49,7 @@ object Tables {
     }.toSeq: _*)
   }
 
-  /** Historical driver layouts wrote `events.ts` as parquet
-    * TIMESTAMP(NANOS), which Spark has no native type for — read it as
-    * raw nanos (`nanosAsLong`) and floor-convert to microseconds with
-    * exact integer division (`DIV`, not fp division: 2024 epoch-nanos
-    * ≈ 1.7e18 exceeds double's 2^53 exact range). Current layouts carry
-    * naive µs and take the normalized [[apply]] path directly.
-    */
-  def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = apply(spark, dir, "events")
-    raw.schema("ts").dataType match {
-      // legacy driver testdata: TIMESTAMP(NANOS) surfaced as a long
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", org.apache.spark.sql.functions.expr("timestamp_micros(ts DIV 1000)"))
-      // current layouts: µs timestamps, already instant-normalized
-      case _ => raw
-    }
-  }
+  def events(spark: SparkSession, dir: String): DataFrame     = apply(spark, dir, "events")
   def lineitem(spark: SparkSession, dir: String): DataFrame   = apply(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame     = apply(spark, dir, "orders")
   def customer(spark: SparkSession, dir: String): DataFrame   = apply(spark, dir, "customer")

@@ -3,7 +3,7 @@ package graft.tools
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import graft.sources.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Synthesizes larger scale factors from an existing testdata directory by
@@ -47,13 +47,8 @@ object ScaleUp {
     val dst = if (args.length > 1) args(1) else "/root/repo/data/sf1"
     val factor = if (args.length > 2) args(2).toInt else 10
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, src)
 
     Files.createDirectories(Paths.get(dst))
 
@@ -190,19 +185,19 @@ object ScaleUp {
   }
 
   /** Writes `df` as the single plain file `dst/<name>.parquet` (the
-    * driver-testdata layout DuckDB reads directly). Single-file output
+    * testdata layout DuckDB reads directly), timestamps egressed
+    * as naive int64 µs like the testdata itself. Single-file output
     * stays scan-parallel ONLY with many row groups — a first cut wrote
     * one giant row group per file and every events-family query ran its
     * map side on one core (10-30x at sf1 instead of ~linear) — so the
-    * writer caps row groups at 1 MB and the Bench/Verify sessions set a
-    * split-count floor (`spark.sql.files.minPartitionNum`).
+    * writer caps row groups at [[RowGroupBytes]].
     */
+  private val RowGroupBytes = 1L << 20
+
   private def write(dst: String, name: String, df: DataFrame): Unit = {
     val tmp = Paths.get(dst, s".tmp_$name")
-    val blockBytes = sys.env.getOrElse("SPARK_GRAFT_ROWGROUP_BYTES",
-      (1024 * 1024).toString).toLong
-    df.coalesce(1).write.mode("overwrite")
-      .option("parquet.block.size", blockBytes)
+    graft.Verify.egress(df).coalesce(1).write.mode("overwrite")
+      .option("parquet.block.size", RowGroupBytes)
       .parquet(tmp.toString)
     val part = Files.list(tmp).filter(p => p.getFileName.toString.endsWith(".parquet"))
       .findFirst().orElseThrow(() => new IllegalStateException(s"no parquet part for $name"))

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Warehouse garbage collection (round-15 verdict task 3): persisted
   * artifacts are keyed by corpus FINGERPRINT plus build-constant tags, so
   * regenerated sources and re-tuned constants strand orphan tables that
@@ -45,12 +43,9 @@ object WarehouseGc {
       else (list("/root/testdata") ++ list("data"))
         .filter(_.getName.startsWith("sf")).map(_.getPath).sorted.toSeq
 
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // footer reads and counts only: no shuffle worth sizing, so the
+    // width is the core count whatever the corpora weigh
+    val spark = graft.Session.local(4, "")
 
     // current fingerprints (per source table file) + exact expected names
     // for the versioned families, derived from the SAME constants and
@@ -106,7 +101,7 @@ object WarehouseGc {
         // carries a fingerprint matching no current corpus
         val keep = (tokens.isEmpty || hasCurrentFp) &&
           (!versioned || expected(name))
-        val bytes = du(d)
+        val bytes = graft.Session.sizeOf(d)
         if (keep) { keptB += bytes }
         else {
           sweptB += bytes
@@ -153,7 +148,7 @@ object WarehouseGc {
         var b = 0L
         list("/tmp").filter(f => (f.getName.startsWith("blockmgr-") ||
             f.getName.startsWith("spark-")) && f.lastModified < selfStart)
-          .foreach { d => b += du(d); if (apply) delete(d) }
+          .foreach { d => b += graft.Session.sizeOf(d); if (apply) delete(d) }
         println(f"[gc] scratch: ${if (apply) "swept" else "would sweep"} ${b / 1e9}%.2f GB")
       }
     }
@@ -162,10 +157,6 @@ object WarehouseGc {
 
   private def list(dir: String): Array[java.io.File] =
     Option(new java.io.File(dir).listFiles).getOrElse(Array.empty)
-
-  private def du(f: java.io.File): Long =
-    if (f.isFile) f.length
-    else Option(f.listFiles).map(_.map(du).sum).getOrElse(0L)
 
   private def delete(f: java.io.File): Unit = {
     Option(f.listFiles).foreach(_.foreach(delete))

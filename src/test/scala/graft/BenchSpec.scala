@@ -59,4 +59,13 @@ class BenchSpec extends AnyFunSuite {
       assert(Q.sorted(df, "k") eq df)
     } finally Q.determinismSort = true
   }
+
+  test("JSON escaper output parses back: quote, backslash, tab, CR, \\u0001") {
+    val raw = "q\"b\\t\tc\rx\u0001n\ne"
+    val json = graft.tools.OracleDump.jstr(raw)
+    assert(!json.exists(_ < ' '), s"raw control character left in $json")
+    val back = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readValue(json, classOf[String])
+    assert(back === raw)
+  }
 }

@@ -7,26 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * dominates test wall time otherwise).
   */
 object SparkTestBase {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // mirror Verify's egress representation (see Verify.scala)
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // bucketed-scan ordering is a SESSION-CONSTRUCTION setting (round-15
-      // advice): a20c's exchange-free as-of plan needs it, and setting it
-      // inside one query builder made every LATER bucketed query's plan
-      // depend on whether a20c ran first. One file per bucket is still
-      // required for Spark to claim the order, so it can never assert an
-      // ordering the files don't have.
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-test")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // every suite reads `sf` (sf0.001), far under the factory's 8 MB per
+  // shuffle partition, so the width is the core count without sizing it
+  lazy val spark: SparkSession = Session.local(4, "")
 }
 
 abstract class SparkTestBase extends AnyFunSuite {

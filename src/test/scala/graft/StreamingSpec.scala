@@ -977,9 +977,11 @@ class StreamingSpec extends SparkTestBase {
       // on a shared box does not
       assert(pct(0.5) <= 10000, s"steady-state p50 collapsed: ${pct(0.5)} ms")
       assert(pct(0.99) <= 30000, s"steady-state p99 collapsed: ${pct(0.99)} ms")
-      // tail-shape guard (round-15 task 5, attributed via
-      // tools/SteadyProbe): the measured p99/p50 = 7.7× tail is ENTIRELY
-      // batch 0 — RocksDB instance creation + the first memtable flush
+      // tail-shape guard (round-15 task 5, attributed from per-trigger
+      // phases and RocksDB flush/SST metrics, which the traced stream run
+      // `tsbench/run.py --workload stream --trace 1` reports): the
+      // measured p99/p50 = 7.7× tail is ENTIRELY batch 0 — RocksDB
+      // instance creation + the first memtable flush
       // (5.9 s vs 0.7 s steady; gc ≤ 0.1 s, compaction 0 in all 50
       // batches). Past batch 0 the only recurring bump is the
       // every-~10th-batch memtable flush + snapshot checkpoint
@@ -992,7 +994,7 @@ class StreamingSpec extends SparkTestBase {
         (p * postWarm.length).toInt))
       assert(ppct(0.99) <= math.max(ppct(0.5) * 6, 2000L),
         s"post-warmup tail regressed: p50=${ppct(0.5)} ms p99=${ppct(0.99)} ms " +
-          s"(batch 0 = ${batchMs.head} ms is excluded warmup; see SteadyProbe)")
+          s"(batch 0 = ${batchMs.head} ms is excluded warmup; see the traced tsbench stream run)")
       val early = batchMs.slice(5, 15).sorted.apply(5)
       val late = batchMs.takeRight(10).sorted.apply(5)
       assert(late <= math.max(early, 200L) * 10,

@@ -18,8 +18,7 @@ class ZOrderSpec extends SparkTestBase {
     if (Files.exists(p))
       Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.delete(_))
 
-  // 64x64 uniform key space derived from events (Tables.events handles
-  // the NANOS ts column Spark cannot read natively)
+  // 64x64 uniform key space derived from events
   private def keyed = graft.sources.Tables.events(spark, sf)
     .select(pmod(col("user_id"), lit(64)).cast("long").as("x"),
       pmod(col("event_id"), lit(64)).cast("long").as("y"),

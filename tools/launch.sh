@@ -16,5 +16,4 @@ exec java -Xmx${DRIVER_MEM:-16g} \
   --add-opens java.base/sun.nio.cs=ALL-UNNAMED \
   --add-opens java.base/sun.security.action=ALL-UNNAMED \
   --add-opens java.base/sun.util.calendar=ALL-UNNAMED \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "${GRAFT_CP:-/root/repo/target/scala-2.13/classes}:/opt/spark/jars/*" "$MAIN" "$@"
