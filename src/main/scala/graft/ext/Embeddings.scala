@@ -2,9 +2,11 @@ package graft.ext
 
 import graft.Q
 import graft.sources.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** Embedding-column aggregation — the vector half of a training-data
   * pipeline that the similarity family (e1–e5) doesn't cover: per-label
@@ -599,7 +601,8 @@ object Embeddings {
     * small by definition here; a corpus-sized query set belongs in the
     * shuffle-join formulation, not this one.
     *
-    * `queries`: (qid, qe) with qe an embedding array. Returns
+    * `queries`: (qid, qe) with qe a float embedding array and qid of any
+    * orderable type, which `query_id` keeps. Returns
     * (query_id, neighbor_id, rk, adist2_e6), k rows per query, ranked by
     * (adist2_e6, neighbor_id) — identical to e10's contract (Ext8Spec
     * pins adcTopK ≡ e10 on the gate corpus at a forced 2-query batch).
@@ -608,10 +611,12 @@ object Embeddings {
     * set IS the corpus (e10's shape) each vector's zero-distance match
     * with itself must be dropped, but for an EXTERNAL query set a qid
     * that merely collides with a corpus vec_id would silently lose a
-    * valid neighbor — external callers pass excludeSelf = false.
+    * valid neighbor — external callers (and any non-numeric qid) pass excludeSelf = false.
     */
   def adcTopK(e: DataFrame, queriesIn: DataFrame, k: Int,
       batchSize: Int = 0, excludeSelf: Boolean = true): DataFrame = {
+    require(!excludeSelf || queriesIn.schema("qid").dataType.isInstanceOf[NumericType],
+      "adcTopK: excludeSelf compares qid with vec_id, so it needs a numeric qid; pass excludeSelf = false")
     // PQ codebook dispatched on corpus size (the e11/e13 arm constant):
     // past PqArmMaxRows the 10-codeword label LUT is too coarse for the
     // ADC order to mean anything — see the corpus-sized-codebook note
@@ -627,7 +632,9 @@ object Embeddings {
         Window.orderBy("qid")) - 1) / bs).cast("int"))
       .localCheckpoint()
     val nB = q.agg(coalesce(max("bi"), lit(0)).as("m")).head().getInt(0) + 1
-    import e.sparkSession.implicits._
+    // the caller's own qid field: query_id keeps its type (string, int, ...)
+    val lutSchema = StructType(Seq(q.schema("qid"),
+      StructField("lut", MapType(StringType, LongType, valueContainsNull = false))))
     val scored = (0 until nB).map { i =>
       // round 16: per-batch LUTs as DRIVER math shipped as one local
       // relation (the trained-arm lutDriver convention) instead of a
@@ -635,10 +642,9 @@ object Embeddings {
       // every invocation ~1 s of driver planning/codegen at sf0.1. The
       // per-batch collect is bounded by the same adcMaxQueryBatch line
       // that already bounds the broadcast the LUT rows ride in.
-      val lut = q.where(col("bi") === i).select(col("qid"), col("qe"))
-        .as[(Long, Array[Float])].collect().toSeq
-        .map { case (qid, qv) => (qid, lutDriver(qv, cb)) }
-        .toDF("qid", "lut")
+      val rows = q.where(col("bi") === i).select(col("qid"), col("qe")).collect()
+        .map(r => Row(r.get(0), lutDriver(r.getSeq[Float](1).toArray, cb)))
+      val lut = e.sparkSession.createDataFrame(rows.toSeq.asJava, lutSchema)
       val joined = codes.crossJoin(broadcast(lut))
       (if (excludeSelf) joined.where(col("vec_id") =!= col("qid")) else joined)
         .select(col("qid"), col("vec_id"),
@@ -812,8 +818,6 @@ object Embeddings {
   /** A codebook as a local-relation frame (cl, ce) — the index header
     * shipped into a plan. */
   private def centDfOf(s: SparkSession, cb: Array[(Any, Array[Float])]): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
     val clType: DataType = cb.head._1 match {
       case _: java.lang.Long => LongType
       case _: java.lang.Integer => IntegerType
@@ -823,7 +827,6 @@ object Embeddings {
     val schema = StructType(Seq(
       StructField("cl", clType, nullable = false),
       StructField("ce", ArrayType(FloatType, containsNull = false))))
-    import scala.jdk.CollectionConverters._
     s.createDataFrame(
       cb.toSeq.map { case (cl, ce) => Row(cl, ce.toSeq) }.asJava, schema)
   }

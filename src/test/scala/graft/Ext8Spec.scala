@@ -108,6 +108,30 @@ class Ext8Spec extends SparkTestBase {
     assert(batched == single)
   }
 
+  test("adcTopK: query_id keeps the queries' own qid type (string, int)") {
+    // the LUT rows are collected as Rows, so a string qid must not fail
+    // and an int qid must not widen to bigint; neighbours and distances
+    // are those of the same vectors queried under long qids
+    val e = ext.Portable.spread(sources.Tables.embeddings(spark, sf), "vec_id")
+    val picked = e.where(col("vec_id") < 3)
+    def run(qid: org.apache.spark.sql.Column) = ext.Embeddings.adcTopK(e,
+      picked.select(qid.as("qid"), col("embedding").as("qe")), ext.Similarity.K,
+      batchSize = 2, excludeSelf = false)
+    def rows(df: org.apache.spark.sql.DataFrame, id: Any => Long) =
+      df.collect().map(r => (id(r.get(0)), r.getLong(1), r.getLong(2), r.get(3))).toSet
+    val asString = run(concat(lit("q"), col("vec_id")))
+    val asInt = run(col("vec_id").cast("int"))
+    assert(asString.schema("query_id").dataType == org.apache.spark.sql.types.StringType)
+    assert(asInt.schema("query_id").dataType == org.apache.spark.sql.types.IntegerType)
+    val want = rows(run(col("vec_id")), _.asInstanceOf[Long])
+    assert(want.nonEmpty)
+    assert(rows(asString, q => q.asInstanceOf[String].stripPrefix("q").toLong) == want)
+    assert(rows(asInt, _.asInstanceOf[Int].toLong) == want)
+    // excludeSelf compares qid with vec_id: a string qid is refused up front
+    intercept[IllegalArgumentException](ext.Embeddings.adcTopK(e,
+      picked.select(concat(lit("q"), col("vec_id")).as("qid"), col("embedding").as("qe")), ext.Similarity.K))
+  }
+
   test("e1 adaptive dispatch: banded tier is a subset of the exact tier at gate scale") {
     // below E1ExactMaxN the headline runs the exact grid join; the (8,2)
     // banded tier it switches to at scale must emit only true pairs

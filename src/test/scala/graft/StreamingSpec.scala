@@ -525,6 +525,33 @@ class StreamingSpec extends SparkTestBase {
     }
   }
 
+  test("indicator cascade keeps one RocksDB state row per symbol") {
+    // the scalar recurrences and the three bounded buffers are one
+    // CascState value, so a micro-batch costs each key one state get and
+    // one put; a split layout (list buffers beside a scalar value) would
+    // report several rows per key here
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try {
+      val keys = 50
+      val input = MemoryStream[Bar](spark)
+      val q = Pipeline.indicatorCascade(input.toDS())
+        .writeStream.format("memory").queryName("cascLayout")
+        .outputMode("append").start()
+      for (i <- 0 until 3) {
+        input.addData((0 until keys).map(k => bar(f"K$k%03d", i)))
+        q.processAllAvailable()
+      }
+      val rowsTotal = q.lastProgress.stateOperators.head.numRowsTotal
+      q.stop()
+      assert(spark.table("cascLayout").count() == keys * 3L)
+      assert(rowsTotal == keys, s"$rowsTotal state rows for $keys keys")
+    } finally {
+      spark.streams.active.foreach(_.stop())
+      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
+  }
+
   test("streaming pairs strategy equals the batch t6 algebra on the same frames") {
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
