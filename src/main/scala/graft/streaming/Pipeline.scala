@@ -27,8 +27,16 @@ import org.apache.spark.sql.types._
   * project, CASE) — it scales with source partitions, no shuffle. State
   * enters only at the upsert (foreachBatch dedup = one hash aggregation
   * per micro-batch) and the bounded buffer (flatMapGroupsWithState keyed
-  * by symbol; state size is capped at 20 rows * |symbols|, and the
-  * watermark bounds how long state lingers).
+  * by symbol; state size is capped at 20 rows * |symbols|).
+  *
+  * The watermark: [[score]] keeps the reference's, and it bounds only the
+  * event-time operators (windowed aggregations such as [[rebar]] and
+  * [[sessionize]], `dropDuplicatesWithinWatermark`, [[intervalJoin]]),
+  * which drop late rows and evict state by it. The `transformWithState`
+  * processors here run without event time (`TimeMode.None`, or
+  * processing time for the pairs legs' TTL): they never read the
+  * watermark, so their entry points strip it from the input rather than
+  * let each advance schedule an empty micro-batch (see [[score]]).
   */
 object Pipeline {
 
@@ -81,6 +89,16 @@ object Pipeline {
 
   /** S7+S8+P4+P5: event time, watermark, rename-to-sink-schema, indicator.
     * Mirrors the Flink job's single SELECT (`flink_processor.py:94-112`).
+    *
+    * The watermark bounds the event-time operators a caller puts
+    * downstream: `dropDuplicatesWithinWatermark`, event-time windows and
+    * stream-stream joins drop late rows and evict state by it. The
+    * `transformWithState` entry points here ([[indicatorCascade]],
+    * [[boundedBufferTws]], [[pairsStrategy]], [[pairCorrStrategy]],
+    * [[ichimoku]]) strip it from their input ([[withoutWatermark]]):
+    * their processors run without event time, so they have no timers
+    * to fire and drop no late rows, and a watermark in the query would
+    * only make Spark run a no-data micro-batch after every advance.
     */
   def score(decoded: DataFrame, watermark: String = "1 second"): DataFrame =
     decoded
@@ -96,6 +114,32 @@ object Pipeline {
         col("Dividends").as("dividends"),
         col("Stock_Splits").as("stock_splits"),
         Core.indicator(col("Close"), col("Open")).as("indicator"))
+
+  /** `bars` without the `EventTimeWatermark` nodes reached from its top
+    * through row-local operators, e.g. [[score]]'s. Spark hands every
+    * stateful operator of a query the one global watermark, and an
+    * append-mode `transformWithState` asks for a no-data micro-batch
+    * whenever it advances — a whole batch (planning, state load and
+    * commit, sink, offset and commit logs) that a processor without
+    * event time spends doing nothing. The walk stops at every other
+    * node, so a watermark that closes windows below (e.g. [[rebar]]'s
+    * `Aggregate` in [[rebarCascade]]) stays. Row-for-row output is
+    * unchanged: only the empty batch goes. */
+  private def withoutWatermark(bars: Dataset[Bar]): Dataset[Bar] = {
+    import org.apache.spark.sql.catalyst.plans.logical._
+    import org.apache.spark.sql.graftshim.Interop
+    def strip(p: LogicalPlan): LogicalPlan = p match {
+      case w: EventTimeWatermark => strip(w.child)
+      case _: Project | _: Filter | _: SerializeFromObject | _: DeserializeToObject |
+          _: MapElements | _: TypedFilter | _: SubqueryAlias =>
+        p.withNewChildren(Seq(strip(p.children.head)))
+      case _ => p
+    }
+    val plan = Interop.analyzed(bars.toDF())
+    val stripped = strip(plan)
+    if (stripped eq plan) bars
+    else Interop.ofRows(bars.sparkSession, stripped).as(barEncoder)
+  }
 
   /** S9: streaming upsert keyed (symbol, datetime) — Flink's JDBC upsert
     * (`flink_processor.py:89`) as foreachBatch + last-write-wins dedup.
@@ -157,10 +201,8 @@ object Pipeline {
       extends StatefulProcessor[String, Bar, Bar] {
     @transient private var buf: ListState[Bar] = _
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      buf = getHandle.getListState[Bar]("buf",
-        org.apache.spark.sql.Encoders.product[Bar], TTLConfig.NONE)
-    }
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      buf = getHandle.getListState[Bar]("buf", barEncoder, TTLConfig.NONE)
 
     override def handleInputRows(key: String, rows: Iterator[Bar],
         timers: TimerValues): Iterator[Bar] = {
@@ -179,7 +221,7 @@ object Pipeline {
   def boundedBufferTws(scored: Dataset[Bar], cap: Int = 20): Dataset[Bar] = {
     require(cap >= 1, s"cap must be >= 1, got $cap")
     import scored.sparkSession.implicits._
-    scored.groupByKey(_.symbol)
+    withoutWatermark(scored).groupByKey(_.symbol)
       .transformWithState(new BoundedBufferProcessor(cap),
         TimeMode.None(), OutputMode.Append())
   }
@@ -211,9 +253,13 @@ object Pipeline {
       atr: Double, obv: Long, peak: Double,
       closes: Array[Double], highs: Array[Double], lows: Array[Double])
 
-  // derived once per JVM: Scala-reflecting the product encoder in every
-  // task's processor init cost more executor CPU than the state reads
+  // state encoders are derived once per JVM: Scala-reflecting a product
+  // encoder in every task's processor init cost more executor CPU than
+  // the cascade's state reads
+  private lazy val barEncoder = org.apache.spark.sql.Encoders.product[Bar]
   private lazy val cascStateEncoder = org.apache.spark.sql.Encoders.product[CascState]
+  private lazy val pairLegEncoder = org.apache.spark.sql.Encoders.product[PairLegState]
+  private lazy val ichiStateEncoder = org.apache.spark.sql.Encoders.product[IchiState]
 
   /** S13→indicators: the streaming twin of the batch `dashboard_cascade`
     * window stack (round-7 verdict task 5) — per-symbol EMA5/15, SMA20,
@@ -244,9 +290,12 @@ object Pipeline {
     * folding (micro-batch arrival order is not event order). Cross-batch
     * disorder is not replayed — late rows would need the batch path or
     * a watermark-delayed emit; same contract as every incremental
-    * indicator store. The full dashboard's global-window columns
-    * (support/resistance, first/last trend) are inherently
-    * whole-history and stay batch-only.
+    * indicator store. The processor runs without event time, so it does
+    * not see the watermark: a bar older than it is folded in like any
+    * other, and [[indicatorCascade]] strips [[score]]'s watermark so its
+    * advance no longer schedules a no-data micro-batch. The full
+    * dashboard's global-window columns (support/resistance, first/last
+    * trend) are inherently whole-history and stay batch-only.
     *
     * Round-10 extension: the strategy signals T1/T3/T4 and patterns
     * G1-G3 are pure functions of the same bounded buffers (the reference
@@ -422,7 +471,7 @@ object Pipeline {
     */
   def indicatorCascade(scored: Dataset[Bar]): Dataset[CascRow] = {
     import scored.sparkSession.implicits._
-    scored.groupByKey(_.symbol)
+    withoutWatermark(scored).groupByKey(_.symbol)
       .transformWithState(new IndicatorCascadeProcessor(),
         TimeMode.None(), OutputMode.Append())
   }
@@ -581,11 +630,9 @@ object Pipeline {
       extends StatefulProcessor[java.sql.Timestamp, Bar, SpreadRow] {
     @transient private var leg: org.apache.spark.sql.streaming.ValueState[PairLegState] = _
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      leg = getHandle.getValueState[PairLegState]("leg",
-        org.apache.spark.sql.Encoders.product[PairLegState],
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      leg = getHandle.getValueState[PairLegState]("leg", pairLegEncoder,
         legTtl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE))
-    }
 
     override def handleInputRows(key: java.sql.Timestamp, rows: Iterator[Bar],
         timers: TimerValues): Iterator[SpreadRow] = {
@@ -658,7 +705,7 @@ object Pipeline {
   def pairsStrategy(bars: Dataset[Bar], symA: String, symB: String,
       legTtl: Option[java.time.Duration] = None): Dataset[PairSignalRow] = {
     import bars.sparkSession.implicits._
-    bars.filter(b => b.symbol == symA || b.symbol == symB)
+    withoutWatermark(bars).filter(b => b.symbol == symA || b.symbol == symB)
       .groupByKey(_.datetime)
       // with a TTL the mode must be ProcessingTime (state TTL is
       // processing-time-based); no timers are registered either way, so
@@ -720,11 +767,9 @@ object Pipeline {
       extends StatefulProcessor[java.sql.Timestamp, Bar, PairObsRow] {
     @transient private var leg: org.apache.spark.sql.streaming.ValueState[PairLegState] = _
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      leg = getHandle.getValueState[PairLegState]("leg",
-        org.apache.spark.sql.Encoders.product[PairLegState],
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      leg = getHandle.getValueState[PairLegState]("leg", pairLegEncoder,
         legTtl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE))
-    }
 
     override def handleInputRows(key: java.sql.Timestamp, rows: Iterator[Bar],
         timers: TimerValues): Iterator[PairObsRow] = {
@@ -827,7 +872,7 @@ object Pipeline {
   def pairCorrStrategy(bars: Dataset[Bar], symA: String, symB: String,
       legTtl: Option[java.time.Duration] = None): Dataset[PairCorrRow] = {
     import bars.sparkSession.implicits._
-    bars.filter(b => b.symbol == symA || b.symbol == symB)
+    withoutWatermark(bars).filter(b => b.symbol == symA || b.symbol == symB)
       .groupByKey(_.datetime)
       .transformWithState(new PairObsProcessor(symA, symB, legTtl),
         if (legTtl.isDefined) TimeMode.ProcessingTime() else TimeMode.None(),
@@ -909,8 +954,7 @@ object Pipeline {
     @transient private var maxTs: org.apache.spark.sql.streaming.ValueState[Long] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      st = getHandle.getValueState[IchiState]("ichi",
-        org.apache.spark.sql.Encoders.product[IchiState], TTLConfig.NONE)
+      st = getHandle.getValueState[IchiState]("ichi", ichiStateEncoder, TTLConfig.NONE)
       maxTs = getHandle.getValueState[Long]("maxTs",
         org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
     }
@@ -973,7 +1017,7 @@ object Pipeline {
   /** Streaming w17 over a bar stream. */
   def ichimoku(bars: Dataset[Bar]): Dataset[IchimokuRow] = {
     import bars.sparkSession.implicits._
-    bars.groupByKey(_.symbol)
+    withoutWatermark(bars).groupByKey(_.symbol)
       .transformWithState(new IchimokuProcessor,
         TimeMode.None(), OutputMode.Append())
   }

@@ -367,8 +367,15 @@ class StreamingSpec extends SparkTestBase {
       }
       val input = MemoryStream[(String, java.sql.Timestamp, Double, Long)](spark)
       val events = input.toDF().toDF("symbol", "ts", "price", "qty")
-      val q = Pipeline.rebarCascade(events, "1 minute", "1 second")
-        .writeStream.format("memory").queryName("rbcasc")
+      val casc = Pipeline.rebarCascade(events, "1 minute", "1 second")
+      // the re-bar's watermark closes its windows, so the cascade keeps it
+      import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, EventTimeWatermark}
+      val plan = casc.queryExecution.analyzed
+      def marks(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
+        p.collect { case w: EventTimeWatermark => w }.size
+      assert(marks(plan) == 1 && plan.collect { case a: Aggregate => marks(a) }.sum == 1,
+        s"expected one watermark, below the re-bar Aggregate:\n$plan")
+      val q = casc.writeStream.format("memory").queryName("rbcasc")
         .outputMode("append").start()
 
       val (w1, w2) = ticks.partition(_._2.before(ts("2024-01-01 10:10:00")))
@@ -546,6 +553,41 @@ class StreamingSpec extends SparkTestBase {
       q.stop()
       assert(spark.table("cascLayout").count() == keys * 3L)
       assert(rowsTotal == keys, s"$rowsTotal state rows for $keys keys")
+    } finally {
+      spark.streams.active.foreach(_.stop())
+      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
+  }
+
+  test("indicator cascade over score(decode) carries no watermark: no no-data batch, no late-row drop") {
+    // the processor runs without event time, so score's watermark would
+    // only schedule an empty micro-batch after every advance
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try {
+      import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
+      import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+      val input = MemoryStream[String](spark)
+      val casc = Pipeline.indicatorCascade(Pipeline.score(Pipeline.decode(input.toDF())).as[Bar])
+      val marks = casc.queryExecution.analyzed.collect { case w: EventTimeWatermark => w }
+      assert(marks.isEmpty, s"watermark left in the cascade's plan: $marks")
+      val q = casc.writeStream.format("memory").queryName("cascNoWm")
+        .outputMode("append").start()
+      input.addData(rec("AAPL", "2024-01-01 10:05:00", 1.0, 2.0),
+        rec("AAPL", "2024-01-01 10:06:00", 2.0, 3.0))
+      q.processAllAvailable()
+      // six minutes older than the newest bar, far past score's 1 s delay
+      input.addData(rec("AAPL", "2024-01-01 10:00:00", 3.0, 4.0))
+      q.processAllAvailable()
+      // processAllAvailable returns once the engine runs no further
+      // batch: two data batches end at id 1, and a no-data batch after
+      // the first landing would make it 2
+      val last = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.currentBatchId
+      q.stop()
+      assert(last == 1, s"two landings ran ${last + 1} micro-batches")
+      val got = spark.table("cascNoWm").select("datetime").as[java.sql.Timestamp].collect().toSet
+      assert(got == Set("10:00:00", "10:05:00", "10:06:00")
+        .map(t => java.sql.Timestamp.valueOf(s"2024-01-01 $t")), s"cascade rows: $got")
     } finally {
       spark.streams.active.foreach(_.stop())
       spark.conf.unset("spark.sql.streaming.stateStore.providerClass")

@@ -12,9 +12,17 @@ JVM starts, so the build stays out of every measurement.
 It prints one line per run, then for each end-to-end metric of
 BENCHMARK.json (read from A): each side's median and quartiles, the
 ratio of the medians B/A, in how many pairs B is better (ties count for
-neither), and the gap between the medians next to the distance between
-A's quartiles. The last line says whether every run was
-`correct` with 0 failed. Exits non-zero if any run failed to finish.
+neither), the gap between the medians next to the distance between A's
+quartiles, and a verdict:
+
+- `claim`: B is better in at least 9 of every 10 pairs, and its median
+  is better than A's by more than IQR(A);
+- `worse>bound`: B's median is worse than A's by more than the metric's
+  `bound` in BENCHMARK.json (a fraction of A's median);
+- `—` otherwise.
+
+The last line says whether every run was `correct` with 0 failed. Exits
+non-zero if any run failed to finish, was not `correct`, or had failures.
 """
 import argparse
 import json
@@ -34,6 +42,17 @@ def quartiles(xs):
     s = sorted(xs)
     h = len(s) // 2
     return median(s[:h] or s), median(s[-h:] or s)
+
+
+def verdict(m, ma, mb, iqr_a, wins, n):
+    """`claim`, `worse>bound` or `—` for metric `m`, from the medians of A
+    and B, A's quartile distance and B's wins out of `n` pairs."""
+    gain = ma - mb if m["better"] == "lower" else mb - ma
+    if wins >= 0.9 * n and gain > iqr_a:
+        return "claim"
+    if ma and -gain / abs(ma) > m["bound"]:
+        return "worse>bound"
+    return "\u2014"
 
 
 def seeds(spec):
@@ -87,8 +106,8 @@ def main():
             pairs.append(got)
 
     print("\n%d pairs, %s, order alternated per seed" % (len(pairs), args.workload))
-    print("%-16s %28s %28s %7s %7s %10s %10s" % (
-        "metric", "A median [q1, q3]", "B median [q1, q3]", "B/A", "B wins", "|gap|", "IQR(A)"))
+    print("%-16s %28s %28s %7s %7s %10s %10s  %s" % (
+        "metric", "A median [q1, q3]", "B median [q1, q3]", "B/A", "B wins", "|gap|", "IQR(A)", "verdict"))
     for m in metrics if pairs else []:
         name, lower = m["name"], m["better"] == "lower"
         a = [p["A"]["metrics"][name]["value"] for p in pairs]
@@ -96,12 +115,13 @@ def main():
         wins = sum(1 for x, y in zip(a, b) if (y < x if lower else y > x))
         (a1, a3), (b1, b3) = quartiles(a), quartiles(b)
         ma, mb = median(a), median(b)
-        print("%-16s %28s %28s %7.3f %4d/%-2d %10.4g %10.4g" % (
+        print("%-16s %28s %28s %7.3f %4d/%-2d %10.4g %10.4g  %s" % (
             name, "%.4g [%.4g, %.4g]" % (ma, a1, a3), "%.4g [%.4g, %.4g]" % (mb, b1, b3),
-            mb / ma if ma else float("nan"), wins, len(pairs), abs(mb - ma), a3 - a1))
+            mb / ma if ma else float("nan"), wins, len(pairs), abs(mb - ma), a3 - a1,
+            verdict(m, ma, mb, a3 - a1, wins, len(pairs))))
     clean = ok and all(r["correct"] and r["failed"] == 0 for r in every)
     print("all %d runs correct with 0 failed: %s" % (len(every), clean))
-    sys.exit(0 if ok else 1)
+    sys.exit(0 if clean else 1)
 
 
 if __name__ == "__main__":
