@@ -49,6 +49,9 @@ object Session {
       // red row). µs represents year 9999 exactly on every reader.
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.ui.enabled", "false")
+      // transformWithState (every `streaming/Pipeline` processor) needs RocksDB
+      .config("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

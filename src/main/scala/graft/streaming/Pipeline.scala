@@ -1,9 +1,9 @@
 package graft.streaming
 
 import graft.ops.Core
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, KeyValueGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, ListState, OutputMode, StatefulProcessor, StreamingQuery, TimeMode, TimerValues, Trigger, TTLConfig}
+import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor, StreamingQuery, TimeMode, TimerValues, Trigger, TTLConfig}
 import org.apache.spark.sql.types._
 
 /** The reference pipeline's streaming half, Spark-first (SURVEY.md §2.8,
@@ -26,17 +26,17 @@ import org.apache.spark.sql.types._
   * Scale design: the ingest path is stateless row-local work (parse,
   * project, CASE) — it scales with source partitions, no shuffle. State
   * enters only at the upsert (foreachBatch dedup = one hash aggregation
-  * per micro-batch) and the bounded buffer (flatMapGroupsWithState keyed
+  * per micro-batch) and the bounded buffer (`transformWithState` keyed
   * by symbol; state size is capped at 20 rows * |symbols|).
   *
   * The watermark: [[score]] keeps the reference's, and it bounds only the
   * event-time operators (windowed aggregations such as [[rebar]] and
   * [[sessionize]], `dropDuplicatesWithinWatermark`, [[intervalJoin]]),
-  * which drop late rows and evict state by it. The `transformWithState`
-  * processors here run without event time (`TimeMode.None`, or
-  * processing time for the pairs legs' TTL): they never read the
-  * watermark, so their entry points strip it from the input rather than
-  * let each advance schedule an empty micro-batch (see [[score]]).
+  * which drop late rows and evict state by it. Every stateful processor
+  * here is a `transformWithState` (on the RocksDB state store that
+  * `graft.Session.local` installs) without event time (`TimeMode.None`):
+  * none reads the watermark, so their entry points strip it from the
+  * input rather than let each advance schedule an empty micro-batch.
   */
 object Pipeline {
 
@@ -94,7 +94,7 @@ object Pipeline {
     * downstream: `dropDuplicatesWithinWatermark`, event-time windows and
     * stream-stream joins drop late rows and evict state by it. The
     * `transformWithState` entry points here ([[indicatorCascade]],
-    * [[boundedBufferTws]], [[pairsStrategy]], [[pairCorrStrategy]],
+    * [[boundedBuffer]], [[pairsStrategy]], [[pairCorrStrategy]],
     * [[ichimoku]]) strip it from their input ([[withoutWatermark]]):
     * their processors run without event time, so they have no timers
     * to fire and drop no late rows, and a watermark in the query would
@@ -164,41 +164,22 @@ object Pipeline {
       volume: Long, dividends: Double, stock_splits: Double,
       indicator: String)
 
-  /** S13: the provider's bounded per-symbol buffer (cap 20,
-    * `provider.py:111-112`) as a stateful streaming op. Emits the full
-    * buffer contents on every update (the provider's consumer-visible
-    * contract: latest <= 20 rows per symbol).
-    */
-  def boundedBuffer(scored: Dataset[Bar], cap: Int = 20): Dataset[Bar] = {
-    import scored.sparkSession.implicits._
-    scored.groupByKey(_.symbol)
-      .flatMapGroupsWithState[List[Bar], Bar](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, rows: Iterator[Bar], state: GroupState[List[Bar]]) =>
-          val prev = state.getOption.getOrElse(Nil)
-          // append in arrival order, keep the latest `cap` rows
-          val next = (prev ++ rows.toList).takeRight(cap)
-          state.update(next)
-          next.iterator
-      }
-  }
-
-  /** S13 on the modern `transformWithState` API (Spark 4): same bounded
-    * 20-row per-symbol buffer, with engine-managed `ListState` instead of
-    * a whole-value `GroupState`. Requires the RocksDB state store
-    * provider (`spark.sql.streaming.stateStore.providerClass`).
+  /** S13: the provider's bounded per-symbol buffer (the latest 20 rows,
+    * `provider.py:111-112`) as a `transformWithState` processor over a
+    * RocksDB `ListState`. Emits the full buffer on every update (the
+    * provider's consumer-visible contract: latest <= 20 rows per symbol).
     *
     * Scale: new rows land via `appendList` — an incremental state-store
     * write — and only an overflowing batch rewrites state (trim + put).
     * The `get()` here serves the EMISSION contract (this operator
     * re-emits the whole buffer, matching the provider's consumer-visible
     * behavior), not state maintenance; a delta-emitting variant would
-    * drop it and never read state on the happy path. A whole-value
-    * `GroupState` ([[boundedBuffer]]) must read+rewrite everything every
-    * batch regardless, which is what this API exists to avoid.
+    * drop it and never read state on the happy path. A whole-value state
+    * (the buffer as one `ValueState` or `GroupState` value) would read
+    * and rewrite all 20 rows every batch, which `ListState` avoids.
     */
-  class BoundedBufferProcessor(cap: Int)
-      extends StatefulProcessor[String, Bar, Bar] {
+  class BoundedBufferProcessor extends StatefulProcessor[String, Bar, Bar] {
+    private val cap = 20
     @transient private var buf: ListState[Bar] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
@@ -218,11 +199,10 @@ object Pipeline {
     }
   }
 
-  def boundedBufferTws(scored: Dataset[Bar], cap: Int = 20): Dataset[Bar] = {
-    require(cap >= 1, s"cap must be >= 1, got $cap")
+  def boundedBuffer(scored: Dataset[Bar]): Dataset[Bar] = {
     import scored.sparkSession.implicits._
     withoutWatermark(scored).groupByKey(_.symbol)
-      .transformWithState(new BoundedBufferProcessor(cap),
+      .transformWithState(new BoundedBufferProcessor,
         TimeMode.None(), OutputMode.Append())
   }
 
@@ -467,7 +447,7 @@ object Pipeline {
 
   /** The streaming indicator cascade over scored bars (see
     * [[IndicatorCascadeProcessor]]). Requires the RocksDB state store
-    * provider, like [[boundedBufferTws]].
+    * provider, like [[boundedBuffer]].
     */
   def indicatorCascade(scored: Dataset[Bar]): Dataset[CascRow] = {
     import scored.sparkSession.implicits._
@@ -590,52 +570,37 @@ object Pipeline {
     indicatorCascade(scored)
   }
 
-  /** Bound on how long an unmatched leg's state may outlive its minute:
-    * past this much processing time, the other leg is treated as dropped
-    * and the record expires (TTL, not a timer — eviction is lazy and
-    * costs nothing per element). One hour ≫ any real ingest skew between
-    * two legs of the same bar grid. State TTL requires
-    * TimeMode.ProcessingTime, which makes the trigger loop itself
-    * processing-time-driven — right for a continuously-running
-    * deployment (pass Some(PairLegTtl)), but a drain-and-stop harness
-    * like MemoryStream + processAllAvailable never reaches quiescence
-    * under it (observed: the pairs spec spun empty batches for 12+
-    * minutes), so the default is off and the specs pin the
-    * TimeMode.None path. */
-  val PairLegTtl: java.time.Duration = java.time.Duration.ofHours(1)
-
-  /** One leg-aligned spread observation — the t6 strategy's input grain. */
-  final case class SpreadRow(pair: String, datetime: java.sql.Timestamp, s: Long)
+  /** One leg-aligned (x, y) cents observation — the grain of both
+    * streaming pairs chains (t6 reads the spread x − y, w16 both legs). */
+  final case class PairObsRow(pair: String, datetime: java.sql.Timestamp,
+      x: Long, y: Long)
 
   /** Streaming t6 output: the batch query's columns, bit-identical. */
   final case class PairSignalRow(pair: String, datetime: java.sql.Timestamp,
       s: Long, signal: Long, milli_z2: Long)
 
-  /** First-arrived-leg state for [[PairSpreadProcessor]]. */
+  /** First-arrived-leg state for [[PairObsProcessor]]. */
   final case class PairLegState(aCents: Long, aSeen: Boolean,
       bCents: Long, bSeen: Boolean)
 
-  /** Stage 1 of the streaming pairs strategy: align the two legs of
-    * (symA, symB) on the bar grid. Keyed by the bar MINUTE — the state
-    * is one small record per UNMATCHED minute (cleared the moment both
-    * legs arrive), so it is bounded by leg skew, not by history — and an
-    * optional state TTL (`legTtl`, see [[PairLegTtl]]) expires minutes
-    * where the other leg never arrives, so a permanent leg dropout
-    * cannot leak one record per minute forever. Cents quantization
-    * matches the batch t6's round(close*100) exactly (prices are
-    * positive, so half-up ≡ half-away-from-zero).
+  /** Stage 1 of both streaming pairs chains: align the two legs of
+    * (symA, symB) on the bar grid and emit the pair of cents values.
+    * Keyed by the bar MINUTE — the state is one small record per
+    * UNMATCHED minute (cleared the moment both legs arrive), so it is
+    * bounded by the minutes whose other leg has not arrived, not by
+    * history. Cents quantization matches the batch t6/w16's
+    * round(close*100) exactly (prices are positive, so half-up ≡
+    * half-away-from-zero).
     */
-  class PairSpreadProcessor(symA: String, symB: String,
-      legTtl: Option[java.time.Duration] = None)
-      extends StatefulProcessor[java.sql.Timestamp, Bar, SpreadRow] {
+  class PairObsProcessor(symA: String, symB: String)
+      extends StatefulProcessor[java.sql.Timestamp, Bar, PairObsRow] {
     @transient private var leg: org.apache.spark.sql.streaming.ValueState[PairLegState] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      leg = getHandle.getValueState[PairLegState]("leg", pairLegEncoder,
-        legTtl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE))
+      leg = getHandle.getValueState[PairLegState]("leg", pairLegEncoder, TTLConfig.NONE)
 
     override def handleInputRows(key: java.sql.Timestamp, rows: Iterator[Bar],
-        timers: TimerValues): Iterator[SpreadRow] = {
+        timers: TimerValues): Iterator[PairObsRow] = {
       var st = Option(leg.get()).getOrElse(PairLegState(0L, false, 0L, false))
       for (b <- rows) {
         val cents = math.round(b.close * 100)
@@ -644,7 +609,7 @@ object Pipeline {
       }
       if (st.aSeen && st.bSeen) {
         leg.clear()
-        Iterator.single(SpreadRow(s"$symA|$symB", key, st.aCents - st.bCents))
+        Iterator.single(PairObsRow(s"$symA|$symB", key, st.aCents, st.bCents))
       } else {
         leg.update(st)
         Iterator.empty
@@ -652,38 +617,50 @@ object Pipeline {
     }
   }
 
-  /** Stage 2: the t6 mean-reversion gate over a bounded per-pair spread
-    * buffer — EXACT integer algebra ((n·s−S)² > 4(n·SS−S²) and the
+  /** The (symA, symB) legs of `bars` aligned per minute ([[PairObsProcessor]]),
+    * keyed by pair for the stage-2 window processors. */
+  private def legs(bars: Dataset[Bar], symA: String,
+      symB: String): KeyValueGroupedDataset[String, PairObsRow] = {
+    import bars.sparkSession.implicits._
+    withoutWatermark(bars).filter(b => b.symbol == symA || b.symbol == symB)
+      .groupByKey(_.datetime)
+      .transformWithState(new PairObsProcessor(symA, symB),
+        TimeMode.None(), OutputMode.Append())
+      .groupByKey(_.pair)
+  }
+
+  /** Stage 2: the t6 mean-reversion gate over a bounded per-pair buffer
+    * of spreads s = x − y — EXACT integer algebra ((n·s−S)² > 4(n·SS−S²) and the
     * floored milli-z², identical to the batch window sums), so stream ≡
     * batch bit-for-bit. O(n) longs of state per pair.
     */
   class PairZScoreProcessor(n: Int = 20)
-      extends StatefulProcessor[String, SpreadRow, PairSignalRow] {
+      extends StatefulProcessor[String, PairObsRow, PairSignalRow] {
     @transient private var buf: ListState[Long] = _
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       buf = getHandle.getListState[Long]("spreads",
         org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
-    }
 
-    override def handleInputRows(key: String, rows: Iterator[SpreadRow],
+    override def handleInputRows(key: String, rows: Iterator[PairObsRow],
         timers: TimerValues): Iterator[PairSignalRow] = {
       val batch = rows.toArray.sortBy(_.datetime.getTime)
       if (batch.isEmpty) return Iterator.empty
       var b = buf.get().toList
       val out = batch.map { r =>
-        b = (b :+ r.s).takeRight(n)
+        val s = r.x - r.y
+        b = (b :+ s).takeRight(n)
         if (b.length >= n) {
           val cnt = n.toLong
           val sm = b.foldLeft(0L)(_ + _)
           val ss = b.foldLeft(0L)((acc, v) => acc + v * v)
-          val dev = cnt * r.s - sm
+          val dev = cnt * s - sm
           val varn = cnt * ss - sm * sm
           val signal =
             if (dev * dev > 4L * varn) { if (dev > 0) -1L else 1L } else 0L
           val z2 = if (varn > 0) dev * dev * 1000L / varn else -1L
-          PairSignalRow(r.pair, r.datetime, r.s, signal, z2)
-        } else PairSignalRow(r.pair, r.datetime, r.s, 0L, -1L)
+          PairSignalRow(r.pair, r.datetime, s, signal, z2)
+        } else PairSignalRow(r.pair, r.datetime, s, 0L, -1L)
       }
       buf.put(b.toArray) // batch.nonEmpty appended at least one
       out.iterator
@@ -702,20 +679,10 @@ object Pipeline {
     * exclusion as every incremental indicator store; stage-1 carry-over
     * within that contract is pinned by the spec.
     */
-  def pairsStrategy(bars: Dataset[Bar], symA: String, symB: String,
-      legTtl: Option[java.time.Duration] = None): Dataset[PairSignalRow] = {
+  def pairsStrategy(bars: Dataset[Bar], symA: String, symB: String): Dataset[PairSignalRow] = {
     import bars.sparkSession.implicits._
-    withoutWatermark(bars).filter(b => b.symbol == symA || b.symbol == symB)
-      .groupByKey(_.datetime)
-      // with a TTL the mode must be ProcessingTime (state TTL is
-      // processing-time-based); no timers are registered either way, so
-      // the operator's row-for-row output is identical in both modes
-      .transformWithState(new PairSpreadProcessor(symA, symB, legTtl),
-        if (legTtl.isDefined) TimeMode.ProcessingTime() else TimeMode.None(),
-        OutputMode.Append())
-      .groupByKey(_.pair)
-      .transformWithState(new PairZScoreProcessor(),
-        TimeMode.None(), OutputMode.Append())
+    legs(bars, symA, symB).transformWithState(new PairZScoreProcessor(),
+      TimeMode.None(), OutputMode.Append())
   }
 
   /** Batch twin of [[pairsStrategy]] — the t6 window algebra restricted
@@ -748,44 +715,32 @@ object Pipeline {
 
   // ---- streaming w16: rolling pair correlation (round-11 task 7) ----
 
-  /** One leg-aligned (x, y) cents observation — streaming w16's grain. */
-  final case class PairObsRow(pair: String, datetime: java.sql.Timestamp,
-      x: Long, y: Long)
-
   /** Streaming w16 output: pair, time, both legs, and the 20-bar Pearson
     * (None until the window fills or when a leg is flat — exactly the
     * batch query's NULL cases). */
   final case class PairCorrRow(pair: String, datetime: java.sql.Timestamp,
       x: Long, y: Long, corr20: Option[Double])
 
-  /** Stage 1 of streaming w16: align both legs on the bar grid, emitting
-    * the PAIR of cents values (t6's [[PairSpreadProcessor]] collapses
-    * them to a spread; correlation needs both). Same minute-keyed
-    * bounded state + TTL discipline. */
-  class PairObsProcessor(symA: String, symB: String,
-      legTtl: Option[java.time.Duration] = None)
-      extends StatefulProcessor[java.sql.Timestamp, Bar, PairObsRow] {
-    @transient private var leg: org.apache.spark.sql.streaming.ValueState[PairLegState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      leg = getHandle.getValueState[PairLegState]("leg", pairLegEncoder,
-        legTtl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE))
-
-    override def handleInputRows(key: java.sql.Timestamp, rows: Iterator[Bar],
-        timers: TimerValues): Iterator[PairObsRow] = {
-      var st = Option(leg.get()).getOrElse(PairLegState(0L, false, 0L, false))
-      for (b <- rows) {
-        val cents = math.round(b.close * 100)
-        if (b.symbol == symA) st = st.copy(aCents = cents, aSeen = true)
-        else if (b.symbol == symB) st = st.copy(bCents = cents, bSeen = true)
-      }
-      if (st.aSeen && st.bSeen) {
-        leg.clear()
-        Iterator.single(PairObsRow(s"$symA|$symB", key, st.aCents, st.bCents))
-      } else {
-        leg.update(st)
-        Iterator.empty
-      }
+  /** The ordering guard of the rolling-window processors
+    * ([[PairCorrProcessor]], [[IchimokuProcessor]]): `times` (one key's
+    * micro-batch, sorted) must all lie after `seen`, the latest time of
+    * the key's earlier batches, and be strictly increasing. A bar stream
+    * emits one row per (key, window), so an EQUAL time is a re-delivered
+    * bar — as corrupt for a rolling buffer as a late one. Throws rather
+    * than splice the buffer out of order and silently diverge from the
+    * batch twin. */
+  private def requireOrdered(what: String, times: Array[java.sql.Timestamp],
+      seen: Long): Unit = {
+    if (times.head.getTime <= seen)
+      throw new IllegalStateException(
+        s"$what: out-of-order or duplicate arrival across micro-batches " +
+          s"(${times.head} after max seen ${new java.sql.Timestamp(seen)}) — " +
+          "feed this processor from a watermark-closed bar stream")
+    times.iterator.sliding(2).withPartial(false).foreach { w =>
+      if (w(0).getTime == w(1).getTime)
+        throw new IllegalStateException(
+          s"$what: duplicate timestamp ${w(0)} within one " +
+            "micro-batch — a bar stream emits one row per (key, window)")
     }
   }
 
@@ -795,14 +750,12 @@ object Pipeline {
     * one division in doubles, so stream ≡ batch bit-for-bit. O(n) longs
     * of state per pair.
     *
-    * ORDERING CONTRACT (same as [[PairSpreadProcessor]] and the cascade,
+    * ORDERING CONTRACT (same as [[pairsStrategy]] and the cascade,
     * see [[rebarCascade]]): rows are sorted within a micro-batch, but
     * arrival must be in event-time order ACROSS micro-batches — the
     * intended upstream is a watermark-closed bar aggregation, whose
-    * append-mode emission is monotone per key. The contract is GUARDED:
-    * a cross-batch regression (late data fed without a watermark gate)
-    * fails the query loudly instead of splicing the rolling buffer out
-    * of order and silently diverging from the batch twin. */
+    * append-mode emission is monotone per key. The contract is GUARDED
+    * ([[requireOrdered]]): late or re-delivered data fails the query. */
   class PairCorrProcessor(n: Int = 20)
       extends StatefulProcessor[String, PairObsRow, PairCorrRow] {
     @transient private var buf: ListState[(Long, Long)] = _
@@ -821,24 +774,8 @@ object Pipeline {
         timers: TimerValues): Iterator[PairCorrRow] = {
       val batch = rows.toArray.sortBy(_.datetime.getTime)
       if (batch.isEmpty) return Iterator.empty
-      val seen = if (maxTs.exists()) maxTs.get() else Long.MinValue
-      // <= : an EQUAL timestamp in a later batch is a re-delivered bar —
-      // as corrupt for the rolling buffer as a late one (a bar stream
-      // emits one row per (key, window))
-      if (batch.head.datetime.getTime <= seen)
-        throw new IllegalStateException(
-          s"pair $key: out-of-order or duplicate arrival across micro-batches " +
-            s"(${batch.head.datetime} after max seen ${new java.sql.Timestamp(seen)}) — " +
-            "feed this processor from a watermark-closed bar stream")
-      // duplicates WITHIN one micro-batch are the same corruption (one
-      // row per (key, window)): the sorted batch must be strictly
-      // increasing, not merely above the previous batch's max
-      batch.iterator.sliding(2).withPartial(false).foreach { w =>
-        if (w(0).datetime.getTime == w(1).datetime.getTime)
-          throw new IllegalStateException(
-            s"pair $key: duplicate timestamp ${w(0).datetime} within one " +
-              "micro-batch — a bar stream emits one row per (key, window)")
-      }
+      requireOrdered(s"pair $key", batch.map(_.datetime),
+        if (maxTs.exists()) maxTs.get() else Long.MinValue)
       maxTs.update(batch.last.datetime.getTime)
       var b = buf.get().toList
       val out = batch.map { r =>
@@ -869,17 +806,10 @@ object Pipeline {
   /** The streaming w16 for one symbol pair — two chained stateful
     * operators, exactly the [[pairsStrategy]] layout with the z-score
     * gate swapped for the Pearson window. Same ordering contract. */
-  def pairCorrStrategy(bars: Dataset[Bar], symA: String, symB: String,
-      legTtl: Option[java.time.Duration] = None): Dataset[PairCorrRow] = {
+  def pairCorrStrategy(bars: Dataset[Bar], symA: String, symB: String): Dataset[PairCorrRow] = {
     import bars.sparkSession.implicits._
-    withoutWatermark(bars).filter(b => b.symbol == symA || b.symbol == symB)
-      .groupByKey(_.datetime)
-      .transformWithState(new PairObsProcessor(symA, symB, legTtl),
-        if (legTtl.isDefined) TimeMode.ProcessingTime() else TimeMode.None(),
-        OutputMode.Append())
-      .groupByKey(_.pair)
-      .transformWithState(new PairCorrProcessor(),
-        TimeMode.None(), OutputMode.Append())
+    legs(bars, symA, symB).transformWithState(new PairCorrProcessor(),
+      TimeMode.None(), OutputMode.Append())
   }
 
   /** Batch twin of [[pairCorrStrategy]] — the w16 window algebra
@@ -945,19 +875,14 @@ object Pipeline {
     * must be event-time monotone per symbol — feed from a
     * watermark-closed bar stream ([[rebarCascade]]'s discipline). An
     * un-gated late bar fails the query loudly instead of entering the
-    * 52-bar window and the 26-deep FIFOs out of order and silently
-    * diverging from the batch cascade. */
+    * 52-bar window and the 26-deep FIFOs out of order. */
   class IchimokuProcessor
       extends StatefulProcessor[String, Bar, IchimokuRow] {
     private val Lead = 26
     @transient private var st: org.apache.spark.sql.streaming.ValueState[IchiState] = _
-    @transient private var maxTs: org.apache.spark.sql.streaming.ValueState[Long] = _
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       st = getHandle.getValueState[IchiState]("ichi", ichiStateEncoder, TTLConfig.NONE)
-      maxTs = getHandle.getValueState[Long]("maxTs",
-        org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
-    }
 
     private def mid(hs: Seq[Double], ls: Seq[Double], n: Long, w: Int): Option[Double] =
       if (n < w) None
@@ -967,24 +892,11 @@ object Pipeline {
         timers: TimerValues): Iterator[IchimokuRow] = {
       val batch = rows.toArray.sortBy(_.datetime.getTime)
       if (batch.isEmpty) return Iterator.empty
-      val seen = if (maxTs.exists()) maxTs.get() else Long.MinValue
-      // <= : see PairCorrProcessor — an equal timestamp is a duplicate
-      if (batch.head.datetime.getTime <= seen)
-        throw new IllegalStateException(
-          s"symbol $key: out-of-order or duplicate arrival across micro-batches " +
-            s"(${batch.head.datetime} after max seen ${new java.sql.Timestamp(seen)}) — " +
-            "feed this processor from a watermark-closed bar stream")
-      // strictly-increasing guard within the batch too (see
-      // PairCorrProcessor): an equal-timestamp pair is a duplicate bar
-      batch.iterator.sliding(2).withPartial(false).foreach { w =>
-        if (w(0).datetime.getTime == w(1).datetime.getTime)
-          throw new IllegalStateException(
-            s"symbol $key: duplicate timestamp ${w(0).datetime} within one " +
-              "micro-batch — a bar stream emits one row per (key, window)")
-      }
-      maxTs.update(batch.last.datetime.getTime)
       var s = Option(st.get()).getOrElse(
         IchiState(Nil, Nil, 0L, Nil, Nil, Nil))
+      // every bar joins `pending`, so its last row is the latest bar seen
+      requireOrdered(s"symbol $key", batch.map(_.datetime),
+        s.pending.lastOption.fold(Long.MinValue)(_.datetime.getTime))
       val out = scala.collection.mutable.ArrayBuffer.empty[IchimokuRow]
       batch.foreach { b =>
         // the arriving close completes (emits) the row 26 back
@@ -1052,67 +964,21 @@ object Pipeline {
   /** Streaming incremental dedup ingest — the end-to-end training-data
     * loop: each micro-batch of documents (doc_id, text) is MinHash-
     * signed, LSH-probed against the corpus band index, exact-Jaccard
-    * verified, and only the survivors are (a) handed to `onKeep` and
-    * (b) appended to the index, so later batches dedup against them.
-    * Within a batch, a doc also drops if it matches an earlier-id
-    * batch member (same greedy rule as the batch `d10_incremental`).
+    * verified (`Dedup.JaccardThreshold`), and only the survivors are
+    * (a) handed to `onKeep` and (b) appended to the index, so later
+    * batches dedup against them. Within a batch, a doc also drops if it
+    * matches an earlier-id batch member (same greedy rule as the batch
+    * `d10_incremental`).
     *
     * Scale: per batch the work is O(batch signatures) + one probe join
-    * against the index — never corpus x corpus. In production the index
-    * is a bucketed table on the band key (`sources/Layout.writeBucketed`:
-    * co-located probe join, no shuffle of the stored side) and the
-    * append is a partition add; here it's an in-memory frame with
-    * lineage cut per batch (`localCheckpoint`), which is the same plan
-    * shape. foreachBatch is the right harness because the probe is a
-    * batch join against a mutable EXTERNAL table — not stream state;
-    * Spark's stateful operators can't host a multi-GB side index.
-    */
-  def dedupIngest(docs: DataFrame, initialIndex: DataFrame,
-      onKeep: (DataFrame, Long) => Unit,
-      jaccardThreshold: Double = graft.ext.Dedup.JaccardThreshold,
-      trigger: Trigger = Trigger.ProcessingTime("0 seconds")): StreamingQuery = {
-    var index = initialIndex.localCheckpoint() // (doc_id, sh, bi, bk)
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val sig = graft.ext.Dedup.signatures(batch.toDF()).localCheckpoint()
-        val bands = graft.ext.Dedup.bandRows(sig)
-        def verifiedDrops(cand: DataFrame): DataFrame = {
-          val inter = size(array_intersect(col("nsh"), col("osh")))
-          cand.where(inter * 1.0 /
-              (size(col("nsh")) + size(col("osh")) - inter) >= jaccardThreshold)
-            .select(col("nid").as("doc_id")).distinct()
-        }
-        val vsCorpus = verifiedDrops(
-          bands.as("n").join(index.as("o"),
-              col("n.bi") === col("o.bi") && col("n.bk") === col("o.bk"))
-            .select(col("n.doc_id").as("nid"), col("n.sh").as("nsh"),
-              col("o.sh").as("osh")).distinct())
-        val vsBatch = verifiedDrops(
-          bands.as("n").join(bands.as("o"),
-              col("n.bi") === col("o.bi") && col("n.bk") === col("o.bk") &&
-                col("n.doc_id") > col("o.doc_id"))
-            .select(col("n.doc_id").as("nid"), col("n.sh").as("nsh"),
-              col("o.sh").as("osh")).distinct())
-        val drops = vsCorpus.union(vsBatch).distinct()
-        val keeps = batch.toDF().join(drops, Seq("doc_id"), "left_anti")
-          .localCheckpoint() // materialize BEFORE the index mutates
-        onKeep(keeps, id)
-        val keptBands = bands.join(drops, Seq("doc_id"), "left_anti")
-          .select(col("doc_id"), col("sh"), col("bi"), col("bk"))
-        index = index.union(keptBands).localCheckpoint()
-      }
-      .start()
-  }
-
-  /** [[dedupIngest]] with the band index persisted in a BUCKETED TABLE
-    * instead of an in-memory frame — the shape that survives at
-    * 100 TB/day: the in-memory union grows without bound and dies with
-    * the job, while a table bucketed on the band key gives (a) crash/
-    * restart durability (a new query against the same table keeps
-    * deduping against everything kept before — spec-pinned), (b) an
-    * append-only write per batch (one sorted file per bucket, no
+    * against the index — never corpus x corpus. foreachBatch is the
+    * right harness because the probe is a batch join against a mutable
+    * EXTERNAL table — not stream state; Spark's stateful operators can't
+    * host a multi-GB side index. The index is a table bucketed on the
+    * band key (created on the first batch if missing), which gives
+    * (a) crash/restart durability (a new query against the same table
+    * keeps deduping against everything kept before — spec-pinned),
+    * (b) an append-only write per batch (one sorted file per bucket, no
     * rewrite), and (c) an exchange-free stored side in the probe join:
     * the scan's bucket layout already satisfies the join's distribution,
     * so only the O(batch) probe side shuffles — the index NEVER moves.
@@ -1120,19 +986,15 @@ object Pipeline {
     * The probe join key is the single column `bkey = xxhash64(bi, bk)`
     * (bucketed single-key joins line up exchange-free; a 64-bit
     * collision merely adds a candidate pair that exact-Jaccard
-    * verification rejects, so keep/drop semantics are identical to
-    * [[dedupIngest]]).
+    * verification rejects).
     */
-  def dedupIngestBucketed(docs: DataFrame, indexTable: String,
-      buckets: Int = 8,
-      onKeep: (DataFrame, Long) => Unit = (_, _) => (),
-      jaccardThreshold: Double = graft.ext.Dedup.JaccardThreshold,
-      trigger: Trigger = Trigger.ProcessingTime("0 seconds")): StreamingQuery = {
+  def dedupIngest(docs: DataFrame, indexTable: String, buckets: Int = 8,
+      onKeep: (DataFrame, Long) => Unit = (_, _) => ()): StreamingQuery = {
     def withBkey(bands: DataFrame): DataFrame =
       bands.withColumn("bkey", xxhash64(col("bi"), col("bk")))
     docs.writeStream
       .outputMode(OutputMode.Append)
-      .trigger(trigger)
+      .trigger(Trigger.ProcessingTime("0 seconds"))
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
         val sp = batch.sparkSession
         if (!sp.catalog.tableExists(indexTable)) {
@@ -1142,26 +1004,19 @@ object Pipeline {
             graft.ext.Dedup.signatures(batch.toDF().limit(0))))
           graft.sources.Layout.writeBucketed(empty, indexTable, "bkey", buckets)
         }
-        val index = sp.table(indexTable)
         val sig = graft.ext.Dedup.signatures(batch.toDF()).localCheckpoint()
         val bands = withBkey(graft.ext.Dedup.bandRows(sig))
-        def verifiedDrops(cand: DataFrame): DataFrame = {
-          val inter = size(array_intersect(col("nsh"), col("osh")))
-          cand.where(inter * 1.0 /
-              (size(col("nsh")) + size(col("osh")) - inter) >= jaccardThreshold)
-            .select(col("nid").as("doc_id")).distinct()
-        }
-        val vsCorpus = verifiedDrops(
-          bands.as("n").join(index.as("o"), col("n.bkey") === col("o.bkey"))
+        // candidate pairs: vs the corpus, and vs an earlier-id batch member
+        def cand(other: DataFrame, on: org.apache.spark.sql.Column): DataFrame =
+          bands.as("n").join(other.as("o"), col("n.bkey") === col("o.bkey") && on)
             .select(col("n.doc_id").as("nid"), col("n.sh").as("nsh"),
-              col("o.sh").as("osh")).distinct())
-        val vsBatch = verifiedDrops(
-          bands.as("n").join(bands.as("o"),
-              col("n.bkey") === col("o.bkey") &&
-                col("n.doc_id") > col("o.doc_id"))
-            .select(col("n.doc_id").as("nid"), col("n.sh").as("nsh"),
-              col("o.sh").as("osh")).distinct())
-        val drops = vsCorpus.union(vsBatch).distinct()
+              col("o.sh").as("osh"))
+        val pairs = cand(sp.table(indexTable), lit(true))
+          .union(cand(bands, col("n.doc_id") > col("o.doc_id"))).distinct()
+        val inter = size(array_intersect(col("nsh"), col("osh")))
+        val drops = pairs.where(inter * 1.0 / (size(col("nsh")) + size(col("osh")) - inter) >=
+            graft.ext.Dedup.JaccardThreshold)
+          .select(col("nid").as("doc_id")).distinct()
         val keeps = batch.toDF().join(drops, Seq("doc_id"), "left_anti")
           .localCheckpoint()
         onKeep(keeps, id)
@@ -1201,12 +1056,6 @@ object Pipeline {
       col(lkey) === col(rkey) &&
         col(rts) >= col(lts) - expr(s"INTERVAL $beforeSec SECONDS") &&
         col(rts) <= col(lts) + expr(s"INTERVAL $afterSec SECONDS"))
-  }
-
-  /** Batch twin of the full ingest for the dry-run/console path (S10). */
-  def batchIngest(spark: SparkSession, jsonLines: Seq[String]): DataFrame = {
-    import spark.implicits._
-    score(decode(jsonLines.toDF("value")))
   }
 
   /** Streaming re-bar: tumbling event-time window OHLC aggregation — the

@@ -20,6 +20,8 @@ class SessionSpec extends SparkTestBase {
     assert(c.get("spark.sql.legacy.bucketedTableScan.outputOrdering") === "true")
     assert(c.get("spark.sql.parquet.outputTimestampType") === "TIMESTAMP_MICROS")
     assert(c.get("spark.ui.enabled") === "false")
+    assert(c.get("spark.sql.streaming.stateStore.providerClass") ===
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     assert(org.apache.logging.log4j.LogManager.getRootLogger.getLevel ===
       org.apache.logging.log4j.Level.WARN)
   }

@@ -22,11 +22,11 @@ class StreamingSpec extends SparkTestBase {
     s"""{"symbol":"$sym","Datetime":"$dt","Open":$o,"High":${math.max(o, c)},"Low":${math.min(o, c)},"Close":$c,"Volume":10,"Dividends":0.0,"Stock_Splits":0.0}"""
 
   test("S6 decode: malformed rows silently dropped, schema-first") {
-    val out = Pipeline.batchIngest(spark, Seq(
+    val out = Pipeline.score(Pipeline.decode(Seq(
       rec("AAPL", "2024-01-01 10:00:00", 1.0, 2.0),
       """{"not json""",
       """{"symbol":"MSFT"}""", // missing Datetime -> dropped
-      rec("MSFT", "2024-01-01 10:01:00", 5.0, 4.0)))
+      rec("MSFT", "2024-01-01 10:01:00", 5.0, 4.0)).toDF("value")))
     val rows = out.orderBy("symbol").collect()
     assert(rows.length == 2)
     assert(rows.map(_.getAs[String]("indicator")).toSeq == Seq("BUY", "SELL"))
@@ -57,7 +57,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("S13 bounded buffer: per-symbol state capped at 20 rows, arrival order kept") {
     val input = MemoryStream[Bar](spark)
-    val out = Pipeline.boundedBuffer(input.toDS(), cap = 20)
+    val out = Pipeline.boundedBuffer(input.toDS())
     val q = out.writeStream.format("memory").queryName("buf")
       .outputMode("append").start()
 
@@ -207,41 +207,46 @@ class StreamingSpec extends SparkTestBase {
   test("dedupIngest: drops vs corpus, within batch, and vs earlier-batch keeps") {
     val s = spark
     import s.implicits._
-    val seed = Seq((1L, "alpha beta gamma delta epsilon zeta eta theta"))
-      .toDF("doc_id", "text")
-    val index = graft.ext.Dedup.bandRows(graft.ext.Dedup.signatures(seed))
+    val t = "graft_band_index_drops_spec"
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    try {
+      val input = MemoryStream[(Long, String)](spark)
+      val kept = mutable.Map[Long, Seq[Long]]()
+      val q = Pipeline.dedupIngest(input.toDF().toDF("doc_id", "text"), t,
+        onKeep = (keeps, id) => kept.synchronized {
+          kept(id) = keeps.select("doc_id")
+            .as[Long](org.apache.spark.sql.Encoders.scalaLong).collect().sorted.toSeq
+        })
 
-    val input = MemoryStream[(Long, String)](spark)
-    val kept = mutable.ArrayBuffer[Long]()
-    val q = Pipeline.dedupIngest(
-      input.toDF().toDF("doc_id", "text"), index,
-      (keeps, _) => kept.synchronized {
-        kept ++= keeps.select("doc_id").as[Long](org.apache.spark.sql.Encoders.scalaLong)
-          .collect()
-      })
+      // batch 0 seeds the corpus
+      input.addData((1L, "alpha beta gamma delta epsilon zeta eta theta"))
+      q.processAllAvailable()
+      input.addData(
+        (10L, "alpha beta gamma delta epsilon zeta eta theta"), // dup of corpus 1
+        (11L, "one two three four five six seven eight nine"),  // unique -> keep
+        (12L, "one two three four five six seven eight nine"))  // dup of 11 in-batch
+      q.processAllAvailable()
+      input.addData(
+        (20L, "one two three four five six seven eight nine"),  // dup of batch-1 KEEP 11
+        (21L, "red orange yellow green blue indigo violet"))    // unique -> keep
+      q.processAllAvailable()
+      q.stop()
 
-    input.addData(
-      (10L, "alpha beta gamma delta epsilon zeta eta theta"), // dup of corpus 1
-      (11L, "one two three four five six seven eight nine"),  // unique -> keep
-      (12L, "one two three four five six seven eight nine"))  // dup of 11 in-batch
-    q.processAllAvailable()
-    input.addData(
-      (20L, "one two three four five six seven eight nine"),  // dup of batch-1 KEEP 11
-      (21L, "red orange yellow green blue indigo violet"))    // unique -> keep
-    q.processAllAvailable()
-    q.stop()
-
-    assert(kept.sorted == Seq(11L, 21L), s"kept=$kept")
+      assert(kept == Map(0L -> Seq(1L), 1L -> Seq(11L), 2L -> Seq(21L)), s"kept=$kept")
+    } finally {
+      spark.streams.active.foreach(_.stop())
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+    }
   }
 
-  test("dedupIngestBucketed: index survives a restart; probe join leaves the stored side unshuffled") {
+  test("dedupIngest: index survives a restart; probe join leaves the index unshuffled") {
     val s = spark
     import s.implicits._
     val t = "graft_band_index_spec"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     try {
       def ingest(input: MemoryStream[(Long, String)], kept: mutable.ArrayBuffer[Long]) =
-        Pipeline.dedupIngestBucketed(
+        Pipeline.dedupIngest(
           input.toDF().toDF("doc_id", "text"), t, buckets = 4,
           onKeep = (keeps, _) => kept.synchronized {
             kept ++= keeps.select("doc_id")
@@ -328,33 +333,7 @@ class StreamingSpec extends SparkTestBase {
       s"unexpected join result: $got")
   }
 
-  test("S13 transformWithState variant: same bounded-buffer semantics on ListState") {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val input = MemoryStream[Bar](spark)
-      val out = Pipeline.boundedBufferTws(input.toDS(), cap = 20)
-      val q = out.writeStream.format("memory").queryName("buftws")
-        .outputMode("append").start()
-
-      input.addData((0 until 30).map(i => bar("AAPL", i)): _*)
-      q.processAllAvailable()
-      input.addData((30 until 35).map(i => bar("AAPL", i)): _*)
-      q.processAllAvailable()
-      q.stop()
-
-      val t = spark.table("buftws").where($"symbol" === "AAPL")
-      assert(t.count() == 40) // 20 (batch 1) + 20 (batch 2 re-emission)
-      assert(t.agg(max("open")).as[Double].head() == 34.0)
-    } finally {
-      spark.streams.active.foreach(_.stop())
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
   test("rebar→cascade composition: ticks to indicators in one query equals the batch twin") {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       def ts(s: String) = java.sql.Timestamp.valueOf(s)
       // 22 one-minute bars per symbol (enough to fill SMA20 and RSI14),
@@ -420,13 +399,10 @@ class StreamingSpec extends SparkTestBase {
       assert(streamed.values.count(_._4.isDefined) > 0, "sma never materialized")
     } finally {
       spark.streams.active.foreach(_.stop())
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
   test("streaming indicator cascade equals the batch window cascade on the same frames") {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       // deterministic non-monotone closes: exercises RSI gain/loss
       // branches, SMA warm-up, and both MACD signs
@@ -528,7 +504,6 @@ class StreamingSpec extends SparkTestBase {
       assert(batchInds.values.exists(_._5 < 0), "drawdown never engaged")
     } finally {
       spark.streams.active.foreach(_.stop())
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -537,8 +512,6 @@ class StreamingSpec extends SparkTestBase {
     // CascState value, so a micro-batch costs each key one state get and
     // one put; a split layout (list buffers beside a scalar value) would
     // report several rows per key here
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       val keys = 50
       val input = MemoryStream[Bar](spark)
@@ -555,15 +528,12 @@ class StreamingSpec extends SparkTestBase {
       assert(rowsTotal == keys, s"$rowsTotal state rows for $keys keys")
     } finally {
       spark.streams.active.foreach(_.stop())
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
   test("indicator cascade over score(decode) carries no watermark: no no-data batch, no late-row drop") {
     // the processor runs without event time, so score's watermark would
     // only schedule an empty micro-batch after every advance
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
       import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
@@ -590,13 +560,10 @@ class StreamingSpec extends SparkTestBase {
         .map(t => java.sql.Timestamp.valueOf(s"2024-01-01 $t")), s"cascade rows: $got")
     } finally {
       spark.streams.active.foreach(_.stop())
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
   test("streaming pairs strategy equals the batch t6 algebra on the same frames") {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       // two legs whose spread mean-reverts with occasional blowouts so
       // the +/-2-sigma gate actually fires both directions
@@ -625,10 +592,17 @@ class StreamingSpec extends SparkTestBase {
         val (a, b) = xs.zipWithIndex.partition(_._2 % 2 == 0)
         (a ++ b.reverse).map(_._1)
       }
+      // stage 1's state rows (the deeper of the two state operators,
+      // listed last): one per minute still waiting for its other leg
+      def legRows(q: org.apache.spark.sql.streaming.StreamingQuery) =
+        q.lastProgress.stateOperators.last.numRowsTotal
       input.addData(shuffle(w1): _*)
       q.processAllAvailable()
       input.addData(shuffle(w2): _*)
       q.processAllAvailable()
+      assert(q.lastProgress.stateOperators.length == 2)
+      // both legs of every minute arrived: stage 1 holds no state
+      assert(legRows(q) == 0, s"${legRows(q)} leg rows after every minute matched")
       q.stop()
 
       def key(r: org.apache.spark.sql.Row) =
@@ -654,7 +628,9 @@ class StreamingSpec extends SparkTestBase {
         .writeStream.format("memory").queryName("pairs_carry")
         .outputMode("append").start()
       in2.addData(mkLeg("AAPL", 0)); q2.processAllAvailable()
+      assert(legRows(q2) == 1, s"${legRows(q2)} leg rows after a lone leg")
       in2.addData(mkLeg("MSFT", 0)); q2.processAllAvailable()
+      assert(legRows(q2) == 0, s"${legRows(q2)} leg rows after the match")
       q2.stop()
       val carried = spark.table("pairs_carry").collect()
       assert(carried.length == 1, s"expected one matched spread, got ${carried.length}")
@@ -663,7 +639,6 @@ class StreamingSpec extends SparkTestBase {
       assert(carried.head.getAs[Long]("s") == want)
     } finally {
       spark.streams.active.foreach(_.stop())
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -696,8 +671,6 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("streaming w16 pair correlation equals the batch window algebra bit-for-bit") {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       // correlated legs with drift + independent wobble so corr20 spans
       // positive, negative, and near-zero regimes
@@ -737,13 +710,10 @@ class StreamingSpec extends SparkTestBase {
       assert(defined.exists(_ > 0.3) || defined.exists(_ < -0.3), "corr never left zero")
     } finally {
       spark.streams.active.foreach(_.stop())
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
   test("streaming w17 ichimoku equals the batch cascade on every completed row") {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       def mkBar(sym: String, i: Int): Bar = {
         val c = 100.0 + 15.0 * math.sin(i * 0.11) + (if (sym == "AAPL") 0.0 else 7.0)
@@ -797,7 +767,6 @@ class StreamingSpec extends SparkTestBase {
       assert(batch.values.exists(_._5.isDefined), "senkou_b never defined")
     } finally {
       spark.streams.active.foreach(_.stop())
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -805,29 +774,46 @@ class StreamingSpec extends SparkTestBase {
     // the ordering contract is guarded, not just documented: un-gated
     // late data must kill the query with a diagnosable error, never
     // splice the rolling state silently (the batch twin would diverge)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val input = MemoryStream[Bar](spark)
-      val q = Pipeline.ichimoku(input.toDS())
-        .writeStream.format("memory").queryName("ichi_guard")
-        .outputMode("append").start()
-      input.addData((10 until 15).map(i => bar("AAPL", i)): _*)
-      q.processAllAvailable()
+    val across = "out-of-order or duplicate arrival across micro-batches"
+    val within = "within one micro-batch"
+    val first = (10 until 15).map(i => bar("AAPL", i))
+    // both legs of each bar, for the pairs chain
+    def legs(bs: Seq[Bar]) = bs.flatMap(b => Seq(b, b.copy(symbol = "MSFT")))
+    // stage 1 keys by the full µs timestamp and the guard compares
+    // milliseconds, so a bar 1 µs after another reaches the Pearson
+    // window as a duplicate of it within the same batch
+    val dup = bar("AAPL", 20)
+    val dupUs = dup.copy(datetime = {
+      val t = new java.sql.Timestamp(dup.datetime.getTime); t.setNanos(1000); t })
+    // (entry point, first landing, second landing, expected message)
+    val cases = Seq[(String, org.apache.spark.sql.Dataset[Bar] => org.apache.spark.sql.Dataset[_],
+        Seq[Bar], Seq[Bar], String)](
       // a bar EARLIER than the max seen arrives in a later micro-batch
-      input.addData(bar("AAPL", 3))
-      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      ("ichimoku", Pipeline.ichimoku(_), first, Seq(bar("AAPL", 3)), across),
+      ("pairCorrStrategy", Pipeline.pairCorrStrategy(_, "AAPL", "MSFT"),
+        legs(first), legs(Seq(bar("AAPL", 3))), across),
+      // two bars with one timestamp land in the same micro-batch
+      ("ichimoku", Pipeline.ichimoku(_), first, Seq(dup, dup), within),
+      ("pairCorrStrategy", Pipeline.pairCorrStrategy(_, "AAPL", "MSFT"),
+        legs(first), legs(Seq(dup, dupUs)), within))
+    def causes(t: Throwable): Seq[String] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+        .map(x => Option(x.getMessage).getOrElse("")).toSeq
+    for (((name, query, landing1, landing2, msg), i) <- cases.zipWithIndex) {
+      try {
+        val input = MemoryStream[Bar](spark)
+        val q = query(input.toDS()).writeStream.format("memory")
+          .queryName(s"guard$i").outputMode("append").start()
+        input.addData(landing1: _*)
         q.processAllAvailable()
-      }
-      def causes(t: Throwable): Seq[String] =
-        Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
-          .map(x => Option(x.getMessage).getOrElse("")).toSeq
-      assert(causes(e).exists(_.contains("out-of-order or duplicate arrival")),
-        s"expected the ordering guard, got: ${causes(e).mkString(" | ")}")
-      q.stop()
-    } finally {
-      spark.streams.active.foreach(_.stop())
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+        input.addData(landing2: _*)
+        val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+          q.processAllAvailable()
+        }
+        assert(causes(e).exists(_.contains(msg)),
+          s"$name: expected '$msg', got: ${causes(e).mkString(" | ")}")
+        q.stop()
+      } finally spark.streams.active.foreach(_.stop())
     }
   }
 
@@ -841,8 +827,6 @@ class StreamingSpec extends SparkTestBase {
     // state, throughput falling off a cliff) fails loudly. Semantics are
     // already pinned by the 2-symbol stream≡batch cases — this asserts
     // only scale-shape facts.
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       val keys = 10000
       val barsPerKey = 25 // > every bounded frame (SMA20/RSI14)
@@ -896,7 +880,6 @@ class StreamingSpec extends SparkTestBase {
           s"state footprint exploded: ${(sstBytes + memBytes) / keys} B/key")
     } finally {
       spark.streams.active.foreach(_.stop())
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -910,8 +893,6 @@ class StreamingSpec extends SparkTestBase {
     // EMA/SMA/RSI accumulator state survived the restart bit-for-bit,
     // so the equality check IS the restore-correctness proof; the
     // restore wall time and per-batch latency land in the test log.
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     spark.conf.set(
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
     val ckpt = java.nio.file.Files.createTempDirectory("graft_restore_ckpt").toString
@@ -985,7 +966,6 @@ class StreamingSpec extends SparkTestBase {
         f"restore throughput collapsed: ${rows2 / restoreSec}%.0f rows/s")
     } finally {
       spark.streams.active.foreach(_.stop())
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
       spark.conf.unset(
         "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
@@ -1003,8 +983,6 @@ class StreamingSpec extends SparkTestBase {
     // and reports p50/p99 of triggerExecution — a NUMBER future rounds
     // regress against instead of an anecdote. Floors are collapse-only:
     // semantics are pinned by the stream≡batch cases above.
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     spark.conf.set(
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
     try {
@@ -1071,7 +1049,6 @@ class StreamingSpec extends SparkTestBase {
           s"(all: ${batchMs.mkString(",")})")
     } finally {
       spark.streams.active.foreach(_.stop())
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
       spark.conf.unset(
         "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
     }
