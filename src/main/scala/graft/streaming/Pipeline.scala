@@ -11,7 +11,7 @@ import org.apache.spark.sql.types._
   *
   *   Kafka topic `stock_data` (JSON, malformed rows silently dropped,
   *   reference `flink_processor/flink_processor.py:52-74`)
-  *     -> event-time `ts` + 1-second watermark (`flink_processor.py:56,64`)
+  *     -> event-time `ts` (`flink_processor.py:56`)
   *     -> BUY/SELL/HOLD CASE (`flink_processor.py:105-109`)
   *     -> upsert into the keyed store, PK (symbol, datetime)
   *        (`flink_processor.py:77-91`, `postgres/init.sql:12`)
@@ -29,14 +29,18 @@ import org.apache.spark.sql.types._
   * per micro-batch) and the bounded buffer (`transformWithState` keyed
   * by symbol; state size is capped at 20 rows * |symbols|).
   *
-  * The watermark: [[score]] keeps the reference's, and it bounds only the
-  * event-time operators (windowed aggregations such as [[rebar]] and
-  * [[sessionize]], `dropDuplicatesWithinWatermark`, [[intervalJoin]]),
-  * which drop late rows and evict state by it. Every stateful processor
-  * here is a `transformWithState` (on the RocksDB state store that
-  * `graft.Session.local` installs) without event time (`TimeMode.None`):
-  * none reads the watermark, so their entry points strip it from the
-  * input rather than let each advance schedule an empty micro-batch.
+  * Event time has one owner: the operator that needs a watermark adds
+  * it. The event-time operators ([[rebar]], [[sessionize]],
+  * [[slidingCount]], [[intervalJoin]]) each declare theirs, because they
+  * drop late rows and evict state by it; [[rebarCascade]]'s, below its
+  * windowed aggregation, closes the bars it feeds the cascade. The
+  * reference's 1-second watermark (`flink_processor.py:64`) is read by
+  * no operator of its job, so [[score]] does not add it. Every stateful
+  * processor here is a `transformWithState` (on the RocksDB state store
+  * that `graft.Session.local` installs) without event time
+  * (`TimeMode.None`): none reads a watermark, and a watermark in front
+  * of one would only make Spark run a no-data micro-batch after each
+  * advance.
   */
 object Pipeline {
 
@@ -87,24 +91,21 @@ object Pipeline {
       .select(col("r.*"))
       .where(col("symbol").isNotNull && col("Datetime").isNotNull)
 
-  /** S7+S8+P4+P5: event time, watermark, rename-to-sink-schema, indicator.
+  /** S7+S8+P4+P5: event time, rename-to-sink-schema, indicator.
     * Mirrors the Flink job's single SELECT (`flink_processor.py:94-112`).
     *
-    * The watermark bounds the event-time operators a caller puts
-    * downstream: `dropDuplicatesWithinWatermark`, event-time windows and
-    * stream-stream joins drop late rows and evict state by it. The
-    * `transformWithState` entry points here ([[indicatorCascade]],
-    * [[boundedBuffer]], [[pairsStrategy]], [[pairCorrStrategy]],
-    * [[ichimoku]]) strip it from their input ([[withoutWatermark]]):
-    * their processors run without event time, so they have no timers
-    * to fire and drop no late rows, and a watermark in the query would
-    * only make Spark run a no-data micro-batch after every advance.
+    * No watermark: the Flink job declares one (`flink_processor.py:64`)
+    * that none of its operators reads, and the `transformWithState`
+    * entry points fed from here ([[indicatorCascade]], [[boundedBuffer]],
+    * [[pairsStrategy]], [[pairCorrStrategy]], [[ichimoku]]) run without
+    * event time. A caller that puts an event-time operator downstream
+    * (`dropDuplicatesWithinWatermark`, a window, a stream-stream join)
+    * declares the watermark it needs on `datetime`.
     */
-  def score(decoded: DataFrame, watermark: String = "1 second"): DataFrame =
+  def score(decoded: DataFrame): DataFrame =
     decoded
       .withColumn("ts", to_timestamp(col("Datetime"), "yyyy-MM-dd HH:mm:ss"))
       .where(col("ts").isNotNull)
-      .withWatermark("ts", watermark)
       .select(
         col("symbol"),
         col("ts").as("datetime"),
@@ -114,32 +115,6 @@ object Pipeline {
         col("Dividends").as("dividends"),
         col("Stock_Splits").as("stock_splits"),
         Core.indicator(col("Close"), col("Open")).as("indicator"))
-
-  /** `bars` without the `EventTimeWatermark` nodes reached from its top
-    * through row-local operators, e.g. [[score]]'s. Spark hands every
-    * stateful operator of a query the one global watermark, and an
-    * append-mode `transformWithState` asks for a no-data micro-batch
-    * whenever it advances — a whole batch (planning, state load and
-    * commit, sink, offset and commit logs) that a processor without
-    * event time spends doing nothing. The walk stops at every other
-    * node, so a watermark that closes windows below (e.g. [[rebar]]'s
-    * `Aggregate` in [[rebarCascade]]) stays. Row-for-row output is
-    * unchanged: only the empty batch goes. */
-  private def withoutWatermark(bars: Dataset[Bar]): Dataset[Bar] = {
-    import org.apache.spark.sql.catalyst.plans.logical._
-    import org.apache.spark.sql.graftshim.Interop
-    def strip(p: LogicalPlan): LogicalPlan = p match {
-      case w: EventTimeWatermark => strip(w.child)
-      case _: Project | _: Filter | _: SerializeFromObject | _: DeserializeToObject |
-          _: MapElements | _: TypedFilter | _: SubqueryAlias =>
-        p.withNewChildren(Seq(strip(p.children.head)))
-      case _ => p
-    }
-    val plan = Interop.analyzed(bars.toDF())
-    val stripped = strip(plan)
-    if (stripped eq plan) bars
-    else Interop.ofRows(bars.sparkSession, stripped).as(barEncoder)
-  }
 
   /** S9: streaming upsert keyed (symbol, datetime) — Flink's JDBC upsert
     * (`flink_processor.py:89`) as foreachBatch + last-write-wins dedup.
@@ -201,7 +176,7 @@ object Pipeline {
 
   def boundedBuffer(scored: Dataset[Bar]): Dataset[Bar] = {
     import scored.sparkSession.implicits._
-    withoutWatermark(scored).groupByKey(_.symbol)
+    scored.groupByKey(_.symbol)
       .transformWithState(new BoundedBufferProcessor,
         TimeMode.None(), OutputMode.Append())
   }
@@ -241,6 +216,19 @@ object Pipeline {
   private lazy val pairLegEncoder = org.apache.spark.sql.Encoders.product[PairLegState]
   private lazy val ichiStateEncoder = org.apache.spark.sql.Encoders.product[IchiState]
 
+  // the rolling frames, each read by its processor and that processor's
+  // batch twin, so a stream and its twin cannot disagree on a frame
+  private final val SmaN = 20 // cascade SMA and G3's rolling mean
+  private final val RsiN = 14 // cascade RSI
+  private final val ZScoreN = 20 // pairs t6 z-score
+  private final val CorrN = 20 // pairs w16 Pearson
+
+  /** Event time in microseconds, the precision of Spark's timestamps:
+    * `Timestamp.getTime` is milliseconds, so it would order two bars
+    * under 1 ms apart by arrival and call them one time. */
+  private def micros(t: java.sql.Timestamp): Long =
+    Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000
+
   /** S13→indicators: the streaming twin of the batch `dashboard_cascade`
     * window stack (round-7 verdict task 5) — per-symbol EMA5/15, SMA20,
     * RSI14, MACD(12,26,9) computed INCREMENTALLY as bars arrive, the
@@ -266,14 +254,12 @@ object Pipeline {
     * accumulates a rows-frame; RSI's row-0 gain/loss are the same
     * synthetic 0.0 the batch CASE emits for the NULL first diff.
     *
-    * Ordering: rows are sorted by event time WITHIN each batch before
-    * folding (micro-batch arrival order is not event order). Cross-batch
-    * disorder is not replayed — late rows would need the batch path or
-    * a watermark-delayed emit; same contract as every incremental
-    * indicator store. The processor runs without event time, so it does
-    * not see the watermark: a bar older than it is folded in like any
-    * other, and [[indicatorCascade]] strips [[score]]'s watermark so its
-    * advance no longer schedules a no-data micro-batch. The full
+    * Ordering: rows are sorted by event time (µs) WITHIN each batch
+    * before folding (micro-batch arrival order is not event order).
+    * Cross-batch disorder is not replayed — late rows would need the
+    * batch path or a watermark-delayed emit; same contract as every
+    * incremental indicator store. The processor runs without event time
+    * and drops nothing: a late bar is folded in like any other. The full
     * dashboard's global-window columns (support/resistance, first/last
     * trend) are inherently whole-history and stay batch-only.
     *
@@ -289,13 +275,11 @@ object Pipeline {
     * in StreamingSpec against a prefix-window batch twin rather than the
     * whole-frame t2 oracle.
     */
-  class IndicatorCascadeProcessor(smaN: Int = 20, rsiN: Int = 14)
-      extends StatefulProcessor[String, Bar, CascRow] {
-    // smaN+5 = G3's reach: rolling-5 mean of the rolling-smaN mean's
-    // slope needs closes[t-(smaN+4)..t]; T4's lagged rolling-20 extrema
-    // need 21 (covered by smaN+5 for any smaN >= 16)
-    private val g3Reach = smaN + 5
-    private val bufCap = Seq(smaN, rsiN + 1, 21, g3Reach).max
+  class IndicatorCascadeProcessor extends StatefulProcessor[String, Bar, CascRow] {
+    // G3's reach, the deepest close frame: the rolling-5 mean of the
+    // rolling-SmaN mean's slope needs closes[t-(SmaN+4)..t] (RSI needs
+    // RsiN+1, T4's lagged rolling-20 extrema 21)
+    private val bufCap = SmaN + 5
     // 16 = stochastic %D's reach: %K(t-2) needs highs/lows[t-15..t-2]
     // (G1/G2's lagged rolling-5 extrema only need 6)
     private val hlCap = 16
@@ -315,7 +299,7 @@ object Pipeline {
 
     override def handleInputRows(key: String, rows: Iterator[Bar],
         timers: TimerValues): Iterator[CascRow] = {
-      val batch = rows.toArray.sortBy(_.datetime.getTime)
+      val batch = rows.toArray.sortBy(b => micros(b.datetime))
       if (batch.isEmpty) return Iterator.empty
       val none = Array.emptyDoubleArray
       var s = Option(st.get()).getOrElse(CascState(0L, 0, 0, 0, 0, 0, 0, 0, 0, 0L, 0, none, none, none))
@@ -339,19 +323,19 @@ object Pipeline {
         val runHigh = if (seeded) math.max(s.runHigh, b.high) else b.high
         val total = s.n + 1
         val sma =
-          if (total >= smaN) Some(win(buf, 0, smaN).foldLeft(0.0)(_ + _) / smaN)
+          if (total >= SmaN) Some(win(buf, 0, SmaN).foldLeft(0.0)(_ + _) / SmaN)
           else None
-        // gains/losses of the last rsiN ROWS: diffs of the last rsiN+1
+        // gains/losses of the last RsiN ROWS: diffs of the last RsiN+1
         // closes, with the symbol's first row contributing the batch
         // CASE's synthetic 0.0 (its diff is NULL) — reachable only while
-        // the window still spans row 0 (total <= rsiN)
-        val rsi = if (total >= rsiN) {
-          val diffs = Array.tabulate(rsiN) { j =>
-            val i = buf.length - rsiN + j // i = 0 only at total = rsiN: buf(0) is row 0
+        // the window still spans row 0 (total <= RsiN)
+        val rsi = if (total >= RsiN) {
+          val diffs = Array.tabulate(RsiN) { j =>
+            val i = buf.length - RsiN + j // i = 0 only at total = RsiN: buf(0) is row 0
             if (i == 0) 0.0 else buf(i) - buf(i - 1)
           }
-          val ag = diffs.foldLeft(0.0)((acc, d) => acc + (if (d > 0) d else 0.0)) / rsiN
-          val al = diffs.foldLeft(0.0)((acc, d) => acc + (if (d < 0) -d else 0.0)) / rsiN
+          val ag = diffs.foldLeft(0.0)((acc, d) => acc + (if (d > 0) d else 0.0)) / RsiN
+          val al = diffs.foldLeft(0.0)((acc, d) => acc + (if (d < 0) -d else 0.0)) / RsiN
           if (al == 0 && ag == 0) None
           else if (al == 0) Some(100.0)
           else Some(100.0 - 100.0 / (1.0 + ag / al))
@@ -391,13 +375,13 @@ object Pipeline {
           val l5p = win(lb, 1, 5).min
           (h5p < h5 && l5p > l5, h5p > h5 && l5p < l5)
         } else (false, false)
-        // G3 — rolling(5) mean of the rolling(smaN)-mean slope > 0. The
+        // G3 — rolling(5) mean of the rolling(SmaN)-mean slope > 0. The
         // rolling means re-derive from the close buffer with the SAME
         // oldest-to-newest fold WindowExec uses, so stream == batch
-        // bit-for-bit; first defined at total = smaN+5 (slope needs
-        // rm(t-1), rm needs smaN rows, the mean needs 5 slopes)
-        val g3 = if (total >= g3Reach) {
-          val rm = Array.tabulate(6)(o => win(buf, o, smaN).foldLeft(0.0)(_ + _) / smaN)
+        // bit-for-bit; first defined at total = SmaN+5 = bufCap (slope
+        // needs rm(t-1), rm needs SmaN rows, the mean needs 5 slopes)
+        val g3 = if (total >= bufCap) {
+          val rm = Array.tabulate(6)(o => win(buf, o, SmaN).foldLeft(0.0)(_ + _) / SmaN)
           val ptBottom = (4 to 0 by -1)
             .foldLeft(0.0)((acc, o) => acc + (rm(o) - rm(o + 1))) / 5
           ptBottom > 0
@@ -451,8 +435,8 @@ object Pipeline {
     */
   def indicatorCascade(scored: Dataset[Bar]): Dataset[CascRow] = {
     import scored.sparkSession.implicits._
-    withoutWatermark(scored).groupByKey(_.symbol)
-      .transformWithState(new IndicatorCascadeProcessor(),
+    scored.groupByKey(_.symbol)
+      .transformWithState(new IndicatorCascadeProcessor,
         TimeMode.None(), OutputMode.Append())
   }
 
@@ -481,7 +465,7 @@ object Pipeline {
         org.apache.spark.sql.functions.abs(col("low") - pc)))
     val l1 = bars.select(col("symbol"), col("datetime"), col("close"),
       ema(col("close"), 5).as("ema5"), ema(col("close"), 15).as("ema15"),
-      mean(col("close"), 20).as("sma"),
+      mean(col("close"), SmaN).as("sma"),
       (col("close") - lag1(col("close"))).as("delta"),
       ema(col("close"), 12).as("e12"), ema(col("close"), 26).as("e26"),
       // strategy/pattern inputs (same expressions as ops/Strategies and
@@ -494,7 +478,7 @@ object Pipeline {
       lag1(rmin(col("close"), 20)).as("bk_min"),
       rmax(col("high"), 5).as("pt_h"), rmin(col("low"), 5).as("pt_l"),
       lag1(rmax(col("high"), 5)).as("pt_hp"), lag1(rmin(col("low"), 5)).as("pt_lp"),
-      mean(col("close"), 20).as("pt_rm"),
+      mean(col("close"), SmaN).as("pt_rm"),
       // w12-w15 (same expressions as ops/Indicators w12_atr..w15_drawdown)
       col("volume"),
       Ewma.alpha(tr, 1.0 / 14, P, O).as("atr"),
@@ -505,7 +489,7 @@ object Pipeline {
     val stochK = when(col("st_hh") === col("st_ll"), lit(null))
       .otherwise(lit(100.0) * (col("close") - col("st_ll")) / (col("st_hh") - col("st_ll")))
     val l2 = l1.select(col("*"), (col("e12") - col("e26")).as("macd"),
-      mean(gain, 14).as("ag"), mean(loss, 14).as("al"),
+      mean(gain, RsiN).as("ag"), mean(loss, RsiN).as("al"),
       (col("pt_rm") - lag1(col("pt_rm"))).as("pt_slope"),
       stochK.as("stoch_k"),
       sum(when(col("delta") > 0, col("volume"))
@@ -555,10 +539,9 @@ object Pipeline {
     *
     * `events`: (symbol, ts, price, qty) — the same input as [[rebar]].
     */
-  def rebarCascade(events: DataFrame, window: String = "1 minute",
-      watermark: String = "1 second"): Dataset[CascRow] = {
+  def rebarCascade(events: DataFrame, window: String = "1 minute"): Dataset[CascRow] = {
     import events.sparkSession.implicits._
-    val bars = rebar(events, window, watermark)
+    val bars = rebar(events, window)
     val scored = bars.select(col("symbol"), col("datetime"),
       col("open").cast("double").as("open"),
       col("high").cast("double").as("high"),
@@ -622,7 +605,7 @@ object Pipeline {
   private def legs(bars: Dataset[Bar], symA: String,
       symB: String): KeyValueGroupedDataset[String, PairObsRow] = {
     import bars.sparkSession.implicits._
-    withoutWatermark(bars).filter(b => b.symbol == symA || b.symbol == symB)
+    bars.filter(b => b.symbol == symA || b.symbol == symB)
       .groupByKey(_.datetime)
       .transformWithState(new PairObsProcessor(symA, symB),
         TimeMode.None(), OutputMode.Append())
@@ -634,8 +617,7 @@ object Pipeline {
     * floored milli-z², identical to the batch window sums), so stream ≡
     * batch bit-for-bit. O(n) longs of state per pair.
     */
-  class PairZScoreProcessor(n: Int = 20)
-      extends StatefulProcessor[String, PairObsRow, PairSignalRow] {
+  class PairZScoreProcessor extends StatefulProcessor[String, PairObsRow, PairSignalRow] {
     @transient private var buf: ListState[Long] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
@@ -644,14 +626,14 @@ object Pipeline {
 
     override def handleInputRows(key: String, rows: Iterator[PairObsRow],
         timers: TimerValues): Iterator[PairSignalRow] = {
-      val batch = rows.toArray.sortBy(_.datetime.getTime)
+      val batch = rows.toArray.sortBy(r => micros(r.datetime))
       if (batch.isEmpty) return Iterator.empty
       var b = buf.get().toList
       val out = batch.map { r =>
         val s = r.x - r.y
-        b = (b :+ s).takeRight(n)
-        if (b.length >= n) {
-          val cnt = n.toLong
+        b = (b :+ s).takeRight(ZScoreN)
+        if (b.length >= ZScoreN) {
+          val cnt = ZScoreN.toLong
           val sm = b.foldLeft(0L)(_ + _)
           val ss = b.foldLeft(0L)((acc, v) => acc + v * v)
           val dev = cnt * s - sm
@@ -681,7 +663,7 @@ object Pipeline {
     */
   def pairsStrategy(bars: Dataset[Bar], symA: String, symB: String): Dataset[PairSignalRow] = {
     import bars.sparkSession.implicits._
-    legs(bars, symA, symB).transformWithState(new PairZScoreProcessor(),
+    legs(bars, symA, symB).transformWithState(new PairZScoreProcessor,
       TimeMode.None(), OutputMode.Append())
   }
 
@@ -698,7 +680,7 @@ object Pipeline {
         col("a.datetime").as("datetime"),
         (col("a.cents") - col("b.cents")).as("s"))
     val win = Window.partitionBy("pair").orderBy("datetime")
-      .rowsBetween(-19, Window.currentRow)
+      .rowsBetween(1 - ZScoreN, Window.currentRow)
     val w = xy.select(col("pair"), col("datetime"), col("s"),
       count(lit(1)).over(win).as("n"),
       sum(col("s")).over(win).as("sm"),
@@ -706,9 +688,9 @@ object Pipeline {
     val dev = col("n") * col("s") - col("sm")
     val varn = col("n") * col("ss") - col("sm") * col("sm")
     w.select(col("pair"), col("datetime"), col("s"),
-      when(col("n") === 20 && dev * dev > lit(4L) * varn,
+      when(col("n") === ZScoreN && dev * dev > lit(4L) * varn,
         when(dev > 0, -1L).otherwise(1L)).otherwise(0L).as("signal"),
-      when(col("n") === 20 && varn > 0,
+      when(col("n") === ZScoreN && varn > 0,
         expr("((n*s - sm)*(n*s - sm) * 1000) div (n*ss - sm*sm)"))
         .otherwise(-1L).as("milli_z2"))
   }
@@ -723,21 +705,22 @@ object Pipeline {
 
   /** The ordering guard of the rolling-window processors
     * ([[PairCorrProcessor]], [[IchimokuProcessor]]): `times` (one key's
-    * micro-batch, sorted) must all lie after `seen`, the latest time of
-    * the key's earlier batches, and be strictly increasing. A bar stream
-    * emits one row per (key, window), so an EQUAL time is a re-delivered
-    * bar — as corrupt for a rolling buffer as a late one. Throws rather
-    * than splice the buffer out of order and silently diverge from the
-    * batch twin. */
+    * micro-batch, sorted) must all lie after `seen`, the latest time (µs)
+    * of the key's earlier batches, and be strictly increasing in µs. A
+    * bar stream emits one row per (key, window), so an EQUAL time is a
+    * re-delivered bar — as corrupt for a rolling buffer as a late one.
+    * Throws rather than splice the buffer out of order and silently
+    * diverge from the batch twin. */
   private def requireOrdered(what: String, times: Array[java.sql.Timestamp],
       seen: Long): Unit = {
-    if (times.head.getTime <= seen)
+    if (micros(times.head) <= seen)
       throw new IllegalStateException(
         s"$what: out-of-order or duplicate arrival across micro-batches " +
-          s"(${times.head} after max seen ${new java.sql.Timestamp(seen)}) — " +
+          s"(${times.head.toInstant} after max seen " +
+          s"${java.time.Instant.EPOCH.plus(seen, java.time.temporal.ChronoUnit.MICROS)}) — " +
           "feed this processor from a watermark-closed bar stream")
     times.iterator.sliding(2).withPartial(false).foreach { w =>
-      if (w(0).getTime == w(1).getTime)
+      if (micros(w(0)) == micros(w(1)))
         throw new IllegalStateException(
           s"$what: duplicate timestamp ${w(0)} within one " +
             "micro-batch — a bar stream emits one row per (key, window)")
@@ -756,39 +739,34 @@ object Pipeline {
     * intended upstream is a watermark-closed bar aggregation, whose
     * append-mode emission is monotone per key. The contract is GUARDED
     * ([[requireOrdered]]): late or re-delivered data fails the query. */
-  class PairCorrProcessor(n: Int = 20)
-      extends StatefulProcessor[String, PairObsRow, PairCorrRow] {
-    @transient private var buf: ListState[(Long, Long)] = _
-    @transient private var maxTs: org.apache.spark.sql.streaming.ValueState[Long] = _
+  class PairCorrProcessor extends StatefulProcessor[String, PairObsRow, PairCorrRow] {
+    // (µs, x, y), oldest first: the newest entry's time is the latest
+    // the key has seen, which the ordering guard reads
+    @transient private var buf: ListState[(Long, Long, Long)] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      buf = getHandle.getListState[(Long, Long)]("obs",
-        org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.scalaLong), TTLConfig.NONE)
-      maxTs = getHandle.getValueState[Long]("maxTs",
-        org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
+      val long = org.apache.spark.sql.Encoders.scalaLong
+      buf = getHandle.getListState[(Long, Long, Long)]("obs",
+        org.apache.spark.sql.Encoders.tuple(long, long, long), TTLConfig.NONE)
     }
 
     override def handleInputRows(key: String, rows: Iterator[PairObsRow],
         timers: TimerValues): Iterator[PairCorrRow] = {
-      val batch = rows.toArray.sortBy(_.datetime.getTime)
+      val batch = rows.toArray.sortBy(r => micros(r.datetime))
       if (batch.isEmpty) return Iterator.empty
-      requireOrdered(s"pair $key", batch.map(_.datetime),
-        if (maxTs.exists()) maxTs.get() else Long.MinValue)
-      maxTs.update(batch.last.datetime.getTime)
       var b = buf.get().toList
+      requireOrdered(s"pair $key", batch.map(_.datetime), b.lastOption.fold(Long.MinValue)(_._1))
       val out = batch.map { r =>
-        b = (b :+ ((r.x, r.y))).takeRight(n)
+        b = (b :+ ((micros(r.datetime), r.x, r.y))).takeRight(CorrN)
         val corr =
-          if (b.length < n) None
+          if (b.length < CorrN) None
           else {
-            val cnt = n.toLong
-            val sx = b.foldLeft(0L)(_ + _._1)
-            val sy = b.foldLeft(0L)(_ + _._2)
-            val sxy = b.foldLeft(0L)((a, v) => a + v._1 * v._2)
-            val sxx = b.foldLeft(0L)((a, v) => a + v._1 * v._1)
-            val syy = b.foldLeft(0L)((a, v) => a + v._2 * v._2)
+            val cnt = CorrN.toLong
+            val sx = b.foldLeft(0L)(_ + _._2)
+            val sy = b.foldLeft(0L)(_ + _._3)
+            val sxy = b.foldLeft(0L)((a, v) => a + v._2 * v._3)
+            val sxx = b.foldLeft(0L)((a, v) => a + v._2 * v._2)
+            val syy = b.foldLeft(0L)((a, v) => a + v._3 * v._3)
             val dx = cnt * sxx - sx * sx
             val dy = cnt * syy - sy * sy
             if (dx > 0 && dy > 0)
@@ -808,7 +786,7 @@ object Pipeline {
     * gate swapped for the Pearson window. Same ordering contract. */
   def pairCorrStrategy(bars: Dataset[Bar], symA: String, symB: String): Dataset[PairCorrRow] = {
     import bars.sparkSession.implicits._
-    legs(bars, symA, symB).transformWithState(new PairCorrProcessor(),
+    legs(bars, symA, symB).transformWithState(new PairCorrProcessor,
       TimeMode.None(), OutputMode.Append())
   }
 
@@ -825,7 +803,7 @@ object Pipeline {
         col("a.datetime").as("datetime"),
         col("a.cents").as("x"), col("b.cents").as("y"))
     val win = Window.partitionBy("pair").orderBy("datetime")
-      .rowsBetween(-19, Window.currentRow)
+      .rowsBetween(1 - CorrN, Window.currentRow)
     val w = xy.select(col("pair"), col("datetime"), col("x"), col("y"),
       count(lit(1)).over(win).as("n"),
       sum(col("x")).over(win).as("sx"), sum(col("y")).over(win).as("sy"),
@@ -835,7 +813,7 @@ object Pipeline {
     val dx = col("n") * col("sxx") - col("sx") * col("sx")
     val dy = col("n") * col("syy") - col("sy") * col("sy")
     w.select(col("pair"), col("datetime"), col("x"), col("y"),
-      when(col("n") === 20 && dx > 0 && dy > 0,
+      when(col("n") === CorrN && dx > 0 && dy > 0,
         (col("n") * col("sxy") - col("sx") * col("sy")).cast("double") /
           (sqrt(dx.cast("double")) * sqrt(dy.cast("double"))))
         .otherwise(lit(null).cast("double")).as("corr20"))
@@ -890,13 +868,13 @@ object Pipeline {
 
     override def handleInputRows(key: String, rows: Iterator[Bar],
         timers: TimerValues): Iterator[IchimokuRow] = {
-      val batch = rows.toArray.sortBy(_.datetime.getTime)
+      val batch = rows.toArray.sortBy(b => micros(b.datetime))
       if (batch.isEmpty) return Iterator.empty
       var s = Option(st.get()).getOrElse(
         IchiState(Nil, Nil, 0L, Nil, Nil, Nil))
       // every bar joins `pending`, so its last row is the latest bar seen
       requireOrdered(s"symbol $key", batch.map(_.datetime),
-        s.pending.lastOption.fold(Long.MinValue)(_.datetime.getTime))
+        s.pending.lastOption.fold(Long.MinValue)(p => micros(p.datetime)))
       val out = scala.collection.mutable.ArrayBuffer.empty[IchimokuRow]
       batch.foreach { b =>
         // the arriving close completes (emits) the row 26 back
@@ -929,7 +907,7 @@ object Pipeline {
   /** Streaming w17 over a bar stream. */
   def ichimoku(bars: Dataset[Bar]): Dataset[IchimokuRow] = {
     import bars.sparkSession.implicits._
-    withoutWatermark(bars).groupByKey(_.symbol)
+    bars.groupByKey(_.symbol)
       .transformWithState(new IchimokuProcessor,
         TimeMode.None(), OutputMode.Append())
   }
@@ -944,16 +922,15 @@ object Pipeline {
     * `a6_sessionize` operator, on Spark's native session windows: each
     * user's events merge into sessions separated by >= `gap` of
     * inactivity; a session closes (and emits, in append mode) once the
-    * watermark passes its end.
+    * watermark (1 second, the reference's delay) passes its end.
     *
     * Scale: state per OPEN session only (watermark-bounded), merged
     * incrementally — the unbounded-history window pass of the batch
     * formulation never materializes.
     */
-  def sessionize(events: DataFrame, gap: String = "30 minutes",
-      watermark: String = "1 second"): DataFrame =
+  def sessionize(events: DataFrame, gap: String = "30 minutes"): DataFrame =
     events
-      .withWatermark("ts", watermark)
+      .withWatermark("ts", "1 second")
       .groupBy(col("user_id"), session_window(col("ts"), gap))
       .agg(count(lit(1)).as("n_events"))
       .select(col("user_id"),
@@ -1037,8 +1014,8 @@ object Pipeline {
     * news/trade events surrounding them.
     *
     * Scale: Spark's symmetric hash join buffers BOTH sides keyed by the
-    * join key, and the interval condition + both watermarks give the
-    * planner a state-eviction bound — a row older than
+    * join key, and the interval condition + both watermarks (10 seconds
+    * each) give the planner a state-eviction bound — a row older than
     * watermark + interval can never match again and is dropped. Without
     * the time bound the join state would grow forever; this shape is the
     * only stream-stream join that survives at 100 TB/day ingest.
@@ -1048,10 +1025,9 @@ object Pipeline {
     */
   def intervalJoin(left: DataFrame, right: DataFrame,
       lkey: String, rkey: String, lts: String, rts: String,
-      beforeSec: Int, afterSec: Int,
-      watermark: String = "10 seconds"): DataFrame = {
-    val l = left.withWatermark(lts, watermark)
-    val r = right.withWatermark(rts, watermark)
+      beforeSec: Int, afterSec: Int): DataFrame = {
+    val l = left.withWatermark(lts, "10 seconds")
+    val r = right.withWatermark(rts, "10 seconds")
     l.join(r,
       col(lkey) === col(rkey) &&
         col(rts) >= col(lts) - expr(s"INTERVAL $beforeSec SECONDS") &&
@@ -1061,18 +1037,18 @@ object Pipeline {
   /** Streaming re-bar: tumbling event-time window OHLC aggregation — the
     * windowed-agg the reference lists as future work (`README.md:343-347`)
     * and the batch `Bars` derivation's streaming twin. Works on any
-    * DataFrame with (symbol, ts-like event time, price, qty); watermark
-    * bounds state so closed windows emit and their state is dropped.
+    * DataFrame with (symbol, ts-like event time, price, qty); the
+    * watermark (1 second, the reference's delay) bounds state so closed
+    * windows emit and their state is dropped.
     *
     * Scale: one keyed stateful aggregation; state is O(open windows x
     * symbols), partial aggregation happens before the shuffle, and the
     * watermark guarantees eviction — the standard production shape for
     * continuous bar building.
     */
-  def rebar(events: DataFrame, window: String = "1 minute",
-      watermark: String = "1 second"): DataFrame =
+  def rebar(events: DataFrame, window: String = "1 minute"): DataFrame =
     events
-      .withWatermark("ts", watermark)
+      .withWatermark("ts", "1 second")
       .groupBy(col("symbol"), org.apache.spark.sql.functions.window(col("ts"), window))
       .agg(
         min_by(col("price"), col("ts")).as("open"),
@@ -1087,15 +1063,15 @@ object Pipeline {
     * batch `a22_hopping` query: each event lands in window/slide
     * overlapping windows (Spark expands the membership per-row before
     * the keyed state lookup), every open window keeps O(1) aggregate
-    * state, and the watermark closes and evicts windows whose end has
-    * passed. Append mode emits each window exactly once, on close —
+    * state, and the watermark (1 second) closes and evicts windows whose
+    * end has passed. Append mode emits each window exactly once, on close —
     * the standard continuous-metrics shape (per-symbol rolling activity
     * at a finer emit cadence than the window length).
     */
   def slidingCount(events: DataFrame, window: String = "5 minutes",
-      slide: String = "1 minute", watermark: String = "1 second"): DataFrame =
+      slide: String = "1 minute"): DataFrame =
     events
-      .withWatermark("ts", watermark)
+      .withWatermark("ts", "1 second")
       .groupBy(col("symbol"),
         org.apache.spark.sql.functions.window(col("ts"), window, slide))
       .agg(count(lit(1)).as("n_events"), sum(col("qty")).as("qty_sum"))

@@ -94,7 +94,7 @@ class StreamingSpec extends SparkTestBase {
   test("streaming re-bar: tumbling OHLC windows close on watermark advance") {
     val input = MemoryStream[(String, java.sql.Timestamp, Double, Long)](spark)
     val events = input.toDF().toDF("symbol", "ts", "price", "qty")
-    val q = Pipeline.rebar(events, "1 minute", "1 second")
+    val q = Pipeline.rebar(events, "1 minute")
       .writeStream.format("memory").queryName("rebar").outputMode("append").start()
 
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
@@ -126,7 +126,7 @@ class StreamingSpec extends SparkTestBase {
   test("streaming sliding windows: each event counts in window/slide windows") {
     val input = MemoryStream[(String, java.sql.Timestamp, Double, Long)](spark)
     val events = input.toDF().toDF("symbol", "ts", "price", "qty")
-    val q = Pipeline.slidingCount(events, "5 minutes", "1 minute", "1 second")
+    val q = Pipeline.slidingCount(events, "5 minutes", "1 minute")
       .writeStream.format("memory").queryName("sliding").outputMode("append").start()
 
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
@@ -156,7 +156,8 @@ class StreamingSpec extends SparkTestBase {
     // keyed state), so the foreachBatch store sees each PK once even
     // before its own dedup
     val input = MemoryStream[String](spark)
-    val deduped = Pipeline.score(Pipeline.decode(input.toDF()), watermark = "10 seconds")
+    val deduped = Pipeline.score(Pipeline.decode(input.toDF()))
+      .withWatermark("datetime", "10 seconds")
       .dropDuplicatesWithinWatermark("symbol", "datetime")
     val q = deduped.writeStream.format("memory").queryName("dedupwm")
       .outputMode("append").start()
@@ -177,7 +178,7 @@ class StreamingSpec extends SparkTestBase {
   test("streaming session windows: gap-merged sessions close on watermark, match batch semantics") {
     val input = MemoryStream[(Long, java.sql.Timestamp)](spark)
     val events = input.toDF().toDF("user_id", "ts")
-    val q = Pipeline.sessionize(events, gap = "30 minutes", watermark = "1 second")
+    val q = Pipeline.sessionize(events, gap = "30 minutes")
       .writeStream.format("memory").queryName("sessions").outputMode("append").start()
 
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
@@ -305,7 +306,7 @@ class StreamingSpec extends SparkTestBase {
       bars.toDF().toDF("symbol", "bar_ts", "close"),
       news.toDF().toDF("n_symbol", "news_ts", "headline"),
       "symbol", "n_symbol", "bar_ts", "news_ts",
-      beforeSec = 60, afterSec = 60, watermark = "10 seconds")
+      beforeSec = 60, afterSec = 60)
     val q = joined.writeStream.format("memory").queryName("ivjoin")
       .outputMode("append").start()
 
@@ -346,7 +347,7 @@ class StreamingSpec extends SparkTestBase {
       }
       val input = MemoryStream[(String, java.sql.Timestamp, Double, Long)](spark)
       val events = input.toDF().toDF("symbol", "ts", "price", "qty")
-      val casc = Pipeline.rebarCascade(events, "1 minute", "1 second")
+      val casc = Pipeline.rebarCascade(events, "1 minute")
       // the re-bar's watermark closes its windows, so the cascade keeps it
       import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, EventTimeWatermark}
       val plan = casc.queryExecution.analyzed
@@ -532,21 +533,32 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("indicator cascade over score(decode) carries no watermark: no no-data batch, no late-row drop") {
-    // the processor runs without event time, so score's watermark would
-    // only schedule an empty micro-batch after every advance
+    // no processor here runs with event time, so a watermark in front of
+    // one would only schedule an empty micro-batch after every advance;
+    // score adds none, and no entry point needs to strip one
     try {
       import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
       import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
       val input = MemoryStream[String](spark)
-      val casc = Pipeline.indicatorCascade(Pipeline.score(Pipeline.decode(input.toDF())).as[Bar])
-      val marks = casc.queryExecution.analyzed.collect { case w: EventTimeWatermark => w }
-      assert(marks.isEmpty, s"watermark left in the cascade's plan: $marks")
+      val scored = Pipeline.score(Pipeline.decode(input.toDF())).as[Bar]
+      for ((name, query) <- Seq[(String, org.apache.spark.sql.Dataset[Bar] => org.apache.spark.sql.Dataset[_])](
+          ("score", identity),
+          ("indicatorCascade", Pipeline.indicatorCascade(_)),
+          ("boundedBuffer", Pipeline.boundedBuffer(_)),
+          ("pairsStrategy", Pipeline.pairsStrategy(_, "AAPL", "MSFT")),
+          ("pairCorrStrategy", Pipeline.pairCorrStrategy(_, "AAPL", "MSFT")),
+          ("ichimoku", Pipeline.ichimoku(_)))) {
+        val marks = query(scored).queryExecution.analyzed.collect { case w: EventTimeWatermark => w }
+        assert(marks.isEmpty, s"watermark in the plan of $name: $marks")
+      }
+      val casc = Pipeline.indicatorCascade(scored)
       val q = casc.writeStream.format("memory").queryName("cascNoWm")
         .outputMode("append").start()
       input.addData(rec("AAPL", "2024-01-01 10:05:00", 1.0, 2.0),
         rec("AAPL", "2024-01-01 10:06:00", 2.0, 3.0))
       q.processAllAvailable()
-      // six minutes older than the newest bar, far past score's 1 s delay
+      // six minutes older than the newest bar, far past the reference's
+      // 1 s watermark delay
       input.addData(rec("AAPL", "2024-01-01 10:00:00", 3.0, 4.0))
       q.processAllAvailable()
       // processAllAvailable returns once the engine runs no further
@@ -777,29 +789,36 @@ class StreamingSpec extends SparkTestBase {
     val across = "out-of-order or duplicate arrival across micro-batches"
     val within = "within one micro-batch"
     val first = (10 until 15).map(i => bar("AAPL", i))
-    // both legs of each bar, for the pairs chain
-    def legs(bs: Seq[Bar]) = bs.flatMap(b => Seq(b, b.copy(symbol = "MSFT")))
-    // stage 1 keys by the full µs timestamp and the guard compares
-    // milliseconds, so a bar 1 µs after another reaches the Pearson
-    // window as a duplicate of it within the same batch
+    // both legs of each bar, for the pairs chain; MSFT's closes differ
+    // from AAPL's so the Pearson window depends on the order it fills in
+    def legs(bs: Seq[Bar]) = bs.flatMap(b => Seq(b, b.copy(symbol = "MSFT", close = b.close * 7 % 11)))
     val dup = bar("AAPL", 20)
-    val dupUs = dup.copy(datetime = {
-      val t = new java.sql.Timestamp(dup.datetime.getTime); t.setNanos(1000); t })
-    // (entry point, first landing, second landing, expected message)
+    // two bars 1 µs apart: distinct event times, which a millisecond
+    // comparison would take for one
+    val early = bar("AAPL", 30)
+    val late = early.copy(close = 45.0, datetime = {
+      val t = new java.sql.Timestamp(early.datetime.getTime); t.setNanos(1000); t })
+    // (entry point, first landing, second landing, expected message, or
+    // the batch twin the output of both landings must equal)
     val cases = Seq[(String, org.apache.spark.sql.Dataset[Bar] => org.apache.spark.sql.Dataset[_],
-        Seq[Bar], Seq[Bar], String)](
+        Seq[Bar], Seq[Bar], Either[String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame])](
       // a bar EARLIER than the max seen arrives in a later micro-batch
-      ("ichimoku", Pipeline.ichimoku(_), first, Seq(bar("AAPL", 3)), across),
+      ("ichimoku", Pipeline.ichimoku(_), first, Seq(bar("AAPL", 3)), Left(across)),
       ("pairCorrStrategy", Pipeline.pairCorrStrategy(_, "AAPL", "MSFT"),
-        legs(first), legs(Seq(bar("AAPL", 3))), across),
-      // two bars with one timestamp land in the same micro-batch
-      ("ichimoku", Pipeline.ichimoku(_), first, Seq(dup, dup), within),
+        legs(first), legs(Seq(bar("AAPL", 3))), Left(across)),
+      // two bars with one timestamp land in the same micro-batch (the
+      // pairs chain cannot land one: its leg aligner keys by the full µs
+      // time, so a re-delivered minute becomes one observation)
+      ("ichimoku", Pipeline.ichimoku(_), first, Seq(dup, dup), Left(within)),
+      // two bars 1 µs apart land newest first: the guard passes them and
+      // the full Pearson window takes them in µs order
       ("pairCorrStrategy", Pipeline.pairCorrStrategy(_, "AAPL", "MSFT"),
-        legs(first), legs(Seq(dup, dupUs)), within))
+        legs((10 until 30).map(i => bar("AAPL", i))), legs(Seq(late, early)),
+        Right(Pipeline.pairCorrBatch(_, "AAPL", "MSFT"))))
     def causes(t: Throwable): Seq[String] =
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
         .map(x => Option(x.getMessage).getOrElse("")).toSeq
-    for (((name, query, landing1, landing2, msg), i) <- cases.zipWithIndex) {
+    for (((name, query, landing1, landing2, expect), i) <- cases.zipWithIndex) {
       try {
         val input = MemoryStream[Bar](spark)
         val q = query(input.toDS()).writeStream.format("memory")
@@ -807,11 +826,23 @@ class StreamingSpec extends SparkTestBase {
         input.addData(landing1: _*)
         q.processAllAvailable()
         input.addData(landing2: _*)
-        val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-          q.processAllAvailable()
+        expect match {
+          case Left(msg) =>
+            val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+              q.processAllAvailable()
+            }
+            assert(causes(e).exists(_.contains(msg)),
+              s"$name: expected '$msg', got: ${causes(e).mkString(" | ")}")
+          case Right(twin) =>
+            q.processAllAvailable()
+            val got = spark.table(s"guard$i").collect().toSeq
+            val times = got.map(_.getTimestamp(1))
+            assert(times.takeRight(2) == Seq(early.datetime, late.datetime) && times == times.sorted,
+              s"$name: rows not in µs order: $times")
+            val want = twin((landing1 ++ landing2).toDF()).collect().toSeq
+            assert(got.length == want.length && got.map(_.toSeq).toSet == want.map(_.toSeq).toSet,
+              s"$name: stream ${got.mkString(", ")} != batch ${want.mkString(", ")}")
         }
-        assert(causes(e).exists(_.contains(msg)),
-          s"$name: expected '$msg', got: ${causes(e).mkString(" | ")}")
         q.stop()
       } finally spark.streams.active.foreach(_.stop())
     }

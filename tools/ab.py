@@ -3,26 +3,33 @@
 
     python3 tools/ab.py A_DIR B_DIR [--workload stream] [--seeds 1-10]
 
-For every seed it runs `tsbench/run.py` once in each checkout, for the
-`run_seconds` that A's BENCHMARK.json sets, back to back, and alternates
-which side goes first (odd seeds A first, even seeds B first), so drift
-in the machine's load falls on both sides alike. `run.py` builds each checkout's benchmark on its first run, before its
-JVM starts, so the build stays out of every measurement.
+It runs every workload that A's BENCHMARK.json lists, one after the
+other; `--workload` narrows the run to one. For every seed it runs
+`tsbench/run.py` once in each checkout, for the `run_seconds` that A's
+BENCHMARK.json sets, back to back, and alternates which side goes first
+(odd seeds A first, even seeds B first), so drift in the machine's load
+falls on both sides alike. `run.py` builds each checkout's benchmark on
+its first run, before its JVM starts, so the build stays out of every
+measurement.
 
-It prints one line per run, then for each end-to-end metric of
-BENCHMARK.json (read from A): each side's median and quartiles, the
-ratio of the medians B/A, in how many pairs B is better (ties count for
-neither), the gap between the medians next to the distance between A's
-quartiles, and a verdict:
+It prints one line per run, then one table per workload: for each
+end-to-end metric of BENCHMARK.json (read from A), each side's median
+and quartiles, the ratio of the medians B/A, in how many pairs B is
+better (ties count for neither), the gap between the medians next to the
+distance between A's quartiles, and a verdict:
 
 - `claim`: B is better in at least 9 of every 10 pairs, and its median
   is better than A's by more than IQR(A);
 - `worse>bound`: B's median is worse than A's by more than the metric's
   `bound` in BENCHMARK.json (a fraction of A's median);
+- `unresolved`: B's median is worse than A's, within the bound, but the
+  distance between either side's quartiles exceeds `bound` times that
+  side's median, so the runs spread too widely to call it unchanged;
 - `—` otherwise.
 
-The last line says whether every run was `correct` with 0 failed. Exits
-non-zero if any run failed to finish, was not `correct`, or had failures.
+The last line of each table says whether every run of that workload was
+`correct` with 0 failed. Exits non-zero if any run failed to finish, was
+not `correct`, or had failures.
 """
 import argparse
 import json
@@ -44,14 +51,17 @@ def quartiles(xs):
     return median(s[:h] or s), median(s[-h:] or s)
 
 
-def verdict(m, ma, mb, iqr_a, wins, n):
-    """`claim`, `worse>bound` or `—` for metric `m`, from the medians of A
-    and B, A's quartile distance and B's wins out of `n` pairs."""
+def verdict(m, ma, mb, iqr_a, iqr_b, wins, n):
+    """`claim`, `worse>bound`, `unresolved` or `—` for metric `m`, from
+    the medians of A and B, both sides' quartile distances and B's wins
+    out of `n` pairs."""
     gain = ma - mb if m["better"] == "lower" else mb - ma
     if wins >= 0.9 * n and gain > iqr_a:
         return "claim"
     if ma and -gain / abs(ma) > m["bound"]:
         return "worse>bound"
+    if gain < 0 and (iqr_a > m["bound"] * abs(ma) or iqr_b > m["bound"] * abs(mb)):
+        return "unresolved"
     return "\u2014"
 
 
@@ -74,26 +84,17 @@ def run(root, workload, seed, seconds):
     return json.loads(lines[-1])
 
 
-def main():
-    ap = argparse.ArgumentParser()
-    ap.add_argument("a")
-    ap.add_argument("b")
-    ap.add_argument("--workload", default="stream")
-    ap.add_argument("--seeds", default="1-10")
-    args = ap.parse_args()
-    sides = {"A": os.path.abspath(args.a), "B": os.path.abspath(args.b)}
-    with open(os.path.join(sides["A"], "BENCHMARK.json")) as fh:
-        bench = json.load(fh)
-    metrics, seconds = bench["end_to_end"], bench["run_seconds"]
-
+def series(sides, workload, seed_list, seconds, metrics):
+    """Runs the paired series of one workload and prints its table; True
+    if every run finished `correct` with 0 failed."""
     every = []
     pairs = []
     ok = True
-    for seed in seeds(args.seeds):
+    for seed in seed_list:
         order = ("A", "B") if seed % 2 else ("B", "A")
         got = {}
         for side in order:
-            r = run(sides[side], args.workload, seed, seconds)
+            r = run(sides[side], workload, seed, seconds)
             if r is None:
                 print("seed %d %s: run failed" % (seed, side))
                 ok = False
@@ -105,7 +106,7 @@ def main():
         if len(got) == 2:
             pairs.append(got)
 
-    print("\n%d pairs, %s, order alternated per seed" % (len(pairs), args.workload))
+    print("\n%d pairs, %s, order alternated per seed" % (len(pairs), workload))
     print("%-16s %28s %28s %7s %7s %10s %10s  %s" % (
         "metric", "A median [q1, q3]", "B median [q1, q3]", "B/A", "B wins", "|gap|", "IQR(A)", "verdict"))
     for m in metrics if pairs else []:
@@ -118,10 +119,26 @@ def main():
         print("%-16s %28s %28s %7.3f %4d/%-2d %10.4g %10.4g  %s" % (
             name, "%.4g [%.4g, %.4g]" % (ma, a1, a3), "%.4g [%.4g, %.4g]" % (mb, b1, b3),
             mb / ma if ma else float("nan"), wins, len(pairs), abs(mb - ma), a3 - a1,
-            verdict(m, ma, mb, a3 - a1, wins, len(pairs))))
+            verdict(m, ma, mb, a3 - a1, b3 - b1, wins, len(pairs))))
     clean = ok and all(r["correct"] and r["failed"] == 0 for r in every)
-    print("all %d runs correct with 0 failed: %s" % (len(every), clean))
-    sys.exit(0 if clean else 1)
+    print("all %d %s runs correct with 0 failed: %s\n" % (len(every), workload, clean), flush=True)
+    return clean
+
+
+def main():
+    ap = argparse.ArgumentParser()
+    ap.add_argument("a")
+    ap.add_argument("b")
+    ap.add_argument("--workload", help="run only this workload (default: every one BENCHMARK.json lists)")
+    ap.add_argument("--seeds", default="1-10")
+    args = ap.parse_args()
+    sides = {"A": os.path.abspath(args.a), "B": os.path.abspath(args.b)}
+    with open(os.path.join(sides["A"], "BENCHMARK.json")) as fh:
+        bench = json.load(fh)
+    workloads = [args.workload] if args.workload else [w["name"] for w in bench["workloads"]]
+    clean = [series(sides, w, seeds(args.seeds), bench["run_seconds"], bench["end_to_end"])
+             for w in workloads]
+    sys.exit(0 if all(clean) else 1)
 
 
 if __name__ == "__main__":
