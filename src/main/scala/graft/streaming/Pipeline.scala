@@ -24,10 +24,13 @@ import org.apache.spark.sql.types._
   * tests) — the engine owns the transforms and state semantics.
   *
   * Scale design: the ingest path is stateless row-local work (parse,
-  * project, CASE) — it scales with source partitions, no shuffle. State
-  * enters only at the upsert (foreachBatch dedup = one hash aggregation
-  * per micro-batch) and the bounded buffer (`transformWithState` keyed
-  * by symbol; state size is capped at 20 rows * |symbols|).
+  * project, CASE) — it scales with source partitions, no shuffle. The
+  * upsert adds no stage: the store applies rows as keyed upserts, and
+  * a keyed stage in front of it ([[indicatorCascade]]) already emits one
+  * row per (symbol, datetime), so a stream micro-batch shuffles once,
+  * into the stage that is keyed by symbol. State lives only in the
+  * `transformWithState` processors keyed by symbol (the bounded buffer
+  * is capped at 20 rows * |symbols|).
   *
   * Event time has one owner: the operator that needs a watermark adds
   * it. The event-time operators ([[rebar]], [[sessionize]],
@@ -117,20 +120,23 @@ object Pipeline {
         Core.indicator(col("Close"), col("Open")).as("indicator"))
 
   /** S9: streaming upsert keyed (symbol, datetime) — Flink's JDBC upsert
-    * (`flink_processor.py:89`) as foreachBatch + last-write-wins dedup.
-    * `store` receives each deduped micro-batch; swap in a JDBC/Delta
-    * MERGE writer in production.
+    * (`flink_processor.py:89`) as foreachBatch. `store` receives each
+    * micro-batch as it is and, like the reference's JDBC upsert writer,
+    * applies its rows as keyed upserts in order: last write wins, within
+    * a batch and across batches, so replays and duplicates converge to
+    * one row per key. The output of a keyed stage such as
+    * [[indicatorCascade]] is already unique per (symbol, datetime) within
+    * a batch; an un-keyed input such as `score(decode(..))` can still
+    * carry in-batch duplicates, which the store resolves. A MERGE-style
+    * writer (JDBC/Delta MERGE), which rejects two source rows for one
+    * target row, must reduce the batch by key first.
     */
   def upsertQuery(scored: DataFrame, store: (DataFrame, Long) => Unit,
       trigger: Trigger = Trigger.ProcessingTime("60 seconds")): StreamingQuery =
     scored.writeStream
       .outputMode(OutputMode.Append)
       .trigger(trigger)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        // one row per PK inside the batch; the store merges across
-        // batches (upsert), so replays/duplicates converge to one row.
-        store(batch.dropDuplicates("symbol", "datetime"), id)
-      }
+      .foreachBatch(store)
       .start()
 
   // one field per init.sql column, in sink order (postgres/init.sql:1-13)
@@ -255,7 +261,10 @@ object Pipeline {
     * synthetic 0.0 the batch CASE emits for the NULL first diff.
     *
     * Ordering: rows are sorted by event time (µs) WITHIN each batch
-    * before folding (micro-batch arrival order is not event order).
+    * before folding (micro-batch arrival order is not event order), and
+    * of two bars with one event time in a batch only the later arrival
+    * is folded and emitted — the sink's upsert semantics, so the output
+    * needs no dedup before the store.
     * Cross-batch disorder is not replayed — late rows would need the
     * batch path or a watermark-delayed emit; same contract as every
     * incremental indicator store. The processor runs without event time
@@ -288,10 +297,30 @@ object Pipeline {
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       st = getHandle.getValueState[CascState]("casc", cascStateEncoder, TTLConfig.NONE)
 
-    /** The `n` entries of `a` ending `o` before its newest, oldest first:
-      * `a.dropRight(o).takeRight(n)` in one copy. */
-    private def win(a: Array[Double], o: Int, n: Int): Array[Double] =
-      a.slice(a.length - o - n, a.length - o)
+    // folds over the `n` entries of `a` ending `o` before its newest
+    // (`a.dropRight(o).takeRight(n)`), as while loops on the primitive
+    // array: the collection folds box every element. Sums run oldest to
+    // newest, WindowExec's order; min/max order by
+    // `java.lang.Double.compare` (NaN largest), as Spark SQL and the
+    // collections' `Ordering[Double]` do.
+    private def sumWin(a: Array[Double], o: Int, n: Int): Double = {
+      var acc = 0.0
+      var i = a.length - o - n
+      while (i < a.length - o) { acc += a(i); i += 1 }
+      acc
+    }
+    private def minWin(a: Array[Double], o: Int, n: Int): Double = {
+      var i = a.length - o - n
+      var m = a(i)
+      while (i < a.length - o) { if (java.lang.Double.compare(a(i), m) < 0) m = a(i); i += 1 }
+      m
+    }
+    private def maxWin(a: Array[Double], o: Int, n: Int): Double = {
+      var i = a.length - o - n
+      var m = a(i)
+      while (i < a.length - o) { if (java.lang.Double.compare(a(i), m) > 0) m = a(i); i += 1 }
+      m
+    }
 
     private def ema(span: Int, prev: Double, x: Double, seeded: Boolean): Double =
       if (!seeded) x
@@ -299,8 +328,15 @@ object Pipeline {
 
     override def handleInputRows(key: String, rows: Iterator[Bar],
         timers: TimerValues): Iterator[CascRow] = {
-      val batch = rows.toArray.sortBy(b => micros(b.datetime))
-      if (batch.isEmpty) return Iterator.empty
+      // the sort is stable, so bars with one event time stay in arrival
+      // order, and only the last of them is folded and emitted: the
+      // keyed store's upsert semantics (last write wins), applied here
+      // so that the output is unique per (symbol, datetime)
+      val sorted = rows.map(b => (micros(b.datetime), b)).toArray.sortBy(_._1)
+      if (sorted.isEmpty) return Iterator.empty
+      val batch = sorted.indices.iterator
+        .filter(i => i + 1 == sorted.length || sorted(i + 1)._1 != sorted(i)._1)
+        .map(sorted(_)._2)
       val none = Array.emptyDoubleArray
       var s = Option(st.get()).getOrElse(CascState(0L, 0, 0, 0, 0, 0, 0, 0, 0, 0L, 0, none, none, none))
       var buf = s.closes
@@ -323,19 +359,24 @@ object Pipeline {
         val runHigh = if (seeded) math.max(s.runHigh, b.high) else b.high
         val total = s.n + 1
         val sma =
-          if (total >= SmaN) Some(win(buf, 0, SmaN).foldLeft(0.0)(_ + _) / SmaN)
+          if (total >= SmaN) Some(sumWin(buf, 0, SmaN) / SmaN)
           else None
         // gains/losses of the last RsiN ROWS: diffs of the last RsiN+1
         // closes, with the symbol's first row contributing the batch
         // CASE's synthetic 0.0 (its diff is NULL) — reachable only while
         // the window still spans row 0 (total <= RsiN)
         val rsi = if (total >= RsiN) {
-          val diffs = Array.tabulate(RsiN) { j =>
-            val i = buf.length - RsiN + j // i = 0 only at total = RsiN: buf(0) is row 0
-            if (i == 0) 0.0 else buf(i) - buf(i - 1)
+          var gains = 0.0
+          var losses = 0.0
+          var i = buf.length - RsiN // i = 0 only at total = RsiN: buf(0) is row 0
+          while (i < buf.length) {
+            val d = if (i == 0) 0.0 else buf(i) - buf(i - 1)
+            gains += (if (d > 0) d else 0.0)
+            losses += (if (d < 0) -d else 0.0)
+            i += 1
           }
-          val ag = diffs.foldLeft(0.0)((acc, d) => acc + (if (d > 0) d else 0.0)) / RsiN
-          val al = diffs.foldLeft(0.0)((acc, d) => acc + (if (d < 0) -d else 0.0)) / RsiN
+          val ag = gains / RsiN
+          val al = losses / RsiN
           if (al == 0 && ag == 0) None
           else if (al == 0) Some(100.0)
           else Some(100.0 - 100.0 / (1.0 + ag / al))
@@ -345,8 +386,7 @@ object Pipeline {
         // unsatisfiable and the signal is always 0 (reference quirk,
         // preserved as-written like the batch t1)
         val t1 = if (total >= 5) {
-          val w5 = win(buf, 0, 5)
-          if (b.close < w5.min) 1 else if (b.close > w5.max) -1 else 0
+          if (b.close < minWin(buf, 0, 5)) 1 else if (b.close > maxWin(buf, 0, 5)) -1 else 0
         } else 0
         // T2 range trading, streaming form: RUNNING support/resistance
         // (extrema over rows seen so far; batch t2's unbounded-following
@@ -363,16 +403,15 @@ object Pipeline {
         // T4 breakout — close vs YESTERDAY'S rolling(20) close extrema
         // (lag1 of a min_periods window: defined from the 21st row on)
         val t4 = if (total >= 21) {
-          val prev = win(buf, 1, 20)
-          if (b.close > prev.max) 1 else if (b.close < prev.min) -1 else 0
+          if (b.close > maxWin(buf, 1, 20)) 1 else if (b.close < minWin(buf, 1, 20)) -1 else 0
         } else 0
         // G1/G2 — lagged vs current rolling(5) high/low extrema; pandas
         // NaN comparisons are false during warm-up (total < 6)
         val (g1, g2) = if (total >= 6) {
-          val h5 = win(hb, 0, 5).max
-          val l5 = win(lb, 0, 5).min
-          val h5p = win(hb, 1, 5).max
-          val l5p = win(lb, 1, 5).min
+          val h5 = maxWin(hb, 0, 5)
+          val l5 = minWin(lb, 0, 5)
+          val h5p = maxWin(hb, 1, 5)
+          val l5p = minWin(lb, 1, 5)
           (h5p < h5 && l5p > l5, h5p > h5 && l5p < l5)
         } else (false, false)
         // G3 — rolling(5) mean of the rolling(SmaN)-mean slope > 0. The
@@ -381,10 +420,11 @@ object Pipeline {
         // bit-for-bit; first defined at total = SmaN+5 = bufCap (slope
         // needs rm(t-1), rm needs SmaN rows, the mean needs 5 slopes)
         val g3 = if (total >= bufCap) {
-          val rm = Array.tabulate(6)(o => win(buf, o, SmaN).foldLeft(0.0)(_ + _) / SmaN)
-          val ptBottom = (4 to 0 by -1)
-            .foldLeft(0.0)((acc, o) => acc + (rm(o) - rm(o + 1))) / 5
-          ptBottom > 0
+          val rm = Array.tabulate(6)(o => sumWin(buf, o, SmaN) / SmaN)
+          var slopes = 0.0
+          var o = 4
+          while (o >= 0) { slopes += rm(o) - rm(o + 1); o -= 1 }
+          slopes / 5 > 0
         } else false
         // W12 ATR — Wilder ewm(alpha=1/14) over the ADX true range, with
         // the batch row-0 quirk (no prev close -> tr = high - low)
@@ -399,8 +439,8 @@ object Pipeline {
         // folded oldest-to-newest like the batch WindowExec frame
         def stochK(o: Int): Option[Double] =
           if (total - o >= 14 && o < buf.length) {
-            val hh = win(hb, o, 14).max
-            val ll = win(lb, o, 14).min
+            val hh = maxWin(hb, o, 14)
+            val ll = minWin(lb, o, 14)
             if (hh == ll) None
             else Some(100.0 * (buf(buf.length - 1 - o) - ll) / (hh - ll))
           } else None
@@ -615,27 +655,34 @@ object Pipeline {
   /** Stage 2: the t6 mean-reversion gate over a bounded per-pair buffer
     * of spreads s = x − y — EXACT integer algebra ((n·s−S)² > 4(n·SS−S²) and the
     * floored milli-z², identical to the batch window sums), so stream ≡
-    * batch bit-for-bit. O(n) longs of state per pair.
+    * batch bit-for-bit. O(n) longs of state per pair. The ordering
+    * contract is [[PairCorrProcessor]]'s, GUARDED the same way
+    * ([[requireOrdered]]).
     */
   class PairZScoreProcessor extends StatefulProcessor[String, PairObsRow, PairSignalRow] {
-    @transient private var buf: ListState[Long] = _
+    // (µs, s), oldest first: the newest entry's time is the latest the
+    // key has seen, which the ordering guard reads
+    @transient private var buf: ListState[(Long, Long)] = _
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      buf = getHandle.getListState[Long]("spreads",
-        org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+      val long = org.apache.spark.sql.Encoders.scalaLong
+      buf = getHandle.getListState[(Long, Long)]("spreads",
+        org.apache.spark.sql.Encoders.tuple(long, long), TTLConfig.NONE)
+    }
 
     override def handleInputRows(key: String, rows: Iterator[PairObsRow],
         timers: TimerValues): Iterator[PairSignalRow] = {
       val batch = rows.toArray.sortBy(r => micros(r.datetime))
       if (batch.isEmpty) return Iterator.empty
       var b = buf.get().toList
+      requireOrdered(s"pair $key", batch.map(_.datetime), b.lastOption.fold(Long.MinValue)(_._1))
       val out = batch.map { r =>
         val s = r.x - r.y
-        b = (b :+ s).takeRight(ZScoreN)
+        b = (b :+ ((micros(r.datetime), s))).takeRight(ZScoreN)
         if (b.length >= ZScoreN) {
           val cnt = ZScoreN.toLong
-          val sm = b.foldLeft(0L)(_ + _)
-          val ss = b.foldLeft(0L)((acc, v) => acc + v * v)
+          val sm = b.foldLeft(0L)(_ + _._2)
+          val ss = b.foldLeft(0L)((acc, v) => acc + v._2 * v._2)
           val dev = cnt * s - sm
           val varn = cnt * ss - sm * sm
           val signal =
@@ -655,11 +702,12 @@ object Pipeline {
     * z-score state. StreamingSpec pins stream ≡ batch on the shared
     * frames; every emitted number is an exact integer.
     *
-    * Ordering contract (the cascade's): spreads enter the z-score buffer
-    * in MATCH order, so a leg that arrives batches late would append its
-    * minute out of event-time order — same cross-batch-disorder
-    * exclusion as every incremental indicator store; stage-1 carry-over
-    * within that contract is pinned by the spec.
+    * Ordering contract: spreads enter the z-score buffer in MATCH
+    * order, so a leg that arrives batches late would append its minute
+    * out of event-time order. Unlike the cascade, which folds a late bar
+    * in, the z-score processor fails the query on it ([[requireOrdered]]),
+    * as the w16 chain does; stage-1 carry-over within that contract is
+    * pinned by the spec.
     */
   def pairsStrategy(bars: Dataset[Bar], symA: String, symB: String): Dataset[PairSignalRow] = {
     import bars.sparkSession.implicits._
@@ -704,7 +752,8 @@ object Pipeline {
       x: Long, y: Long, corr20: Option[Double])
 
   /** The ordering guard of the rolling-window processors
-    * ([[PairCorrProcessor]], [[IchimokuProcessor]]): `times` (one key's
+    * ([[PairZScoreProcessor]], [[PairCorrProcessor]],
+    * [[IchimokuProcessor]]): `times` (one key's
     * micro-batch, sorted) must all lie after `seen`, the latest time (µs)
     * of the key's earlier batches, and be strictly increasing in µs. A
     * bar stream emits one row per (key, window), so an EQUAL time is a

@@ -9,7 +9,7 @@ import org.apache.spark.sql.streaming.Trigger
 import scala.collection.mutable
 
 /** Streaming semantics (SURVEY.md §2.8): JSON decode with corrupt-drop,
-  * event-time scoring, upsert dedup, bounded per-symbol state.
+  * event-time scoring, keyed upsert, bounded per-symbol state.
   */
 class StreamingSpec extends SparkTestBase {
   import spark.implicits._
@@ -33,19 +33,28 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("S9 streaming upsert: duplicates within and across batches converge to one row per PK") {
+    // the store applies each micro-batch's rows as keyed upserts in
+    // order (the reference's JDBC upsert writer): upsertQuery hands it
+    // the batch as it is, in-batch duplicates included
     val input = MemoryStream[String](spark)
     val store = mutable.Map[(String, java.sql.Timestamp), Row]()
-    val scored = Pipeline.score(Pipeline.decode(input.toDF().withColumnRenamed("value", "value")))
+    val seen = mutable.ArrayBuffer.empty[Double]
+    val scored = Pipeline.score(Pipeline.decode(input.toDF()))
     val q = Pipeline.upsertQuery(scored, (batch, _) => {
       batch.collect().foreach { r =>
+        seen += r.getAs[Double]("close")
         store((r.getAs[String]("symbol"), r.getAs[java.sql.Timestamp]("datetime"))) = r
       }
     }, Trigger.ProcessingTime(0L)) // immediate micro-batches; AvailableNow would stop after wave 1
 
+    // one addData is one MemoryStream partition, so arrival order holds
     input.addData(
       rec("AAPL", "2024-01-01 10:00:00", 1.0, 2.0),
       rec("AAPL", "2024-01-01 10:00:00", 1.0, 3.0)) // same PK, same batch
     q.processAllAvailable()
+    assert(seen == Seq(2.0, 3.0), s"store saw $seen")
+    // the later row of the batch wins
+    assert(store.size == 1 && store.values.head.getAs[Double]("close") == 3.0)
     input.addData(rec("AAPL", "2024-01-01 10:00:00", 1.0, 9.0)) // same PK, later batch
     q.processAllAvailable()
     q.stop()
@@ -532,6 +541,76 @@ class StreamingSpec extends SparkTestBase {
     }
   }
 
+  test("stream micro-batch shuffles once: the cascade's keyed stage is the upsert's dedup") {
+    // the frame the store gets for indicatorCascade(score(decode)) is
+    // unique per (symbol, datetime) already, so the upsert adds no
+    // exchange of its own: the one shuffle keys the bars by symbol.
+    // foreachBatch hands the store a scan of the micro-batch's planned
+    // RDD, whose own plan hides the cascade's exchange, so the shuffles
+    // are counted in the lineage that the store's collect runs
+    try {
+      import org.apache.spark.ShuffleDependency
+      def shuffles(rdd: org.apache.spark.rdd.RDD[_]): Int =
+        rdd.dependencies.map {
+          case d: ShuffleDependency[_, _, _] => 1 + shuffles(d.rdd)
+          case d => shuffles(d.rdd)
+        }.sum
+      val input = MemoryStream[String](spark)
+      val scored = Pipeline.score(Pipeline.decode(input.toDF())).as[Bar]
+      val exchanges = mutable.ArrayBuffer.empty[Int]
+      val q = Pipeline.upsertQuery(Pipeline.indicatorCascade(scored).toDF(), (batch, _) => {
+        exchanges += shuffles(batch.queryExecution.toRdd)
+        batch.collect()
+      }, Trigger.ProcessingTime(0L))
+      input.addData(rec("AAPL", "2024-01-01 10:00:00", 1.0, 2.0),
+        rec("MSFT", "2024-01-01 10:00:00", 2.0, 3.0))
+      q.processAllAvailable()
+      q.stop()
+      assert(exchanges == Seq(1), s"exchanges per micro-batch: $exchanges")
+    } finally {
+      spark.streams.active.foreach(_.stop())
+    }
+  }
+
+  test("indicator cascade keeps the last arrival of a duplicated bar and folds it once") {
+    try {
+      def mk(i: Int): Bar = {
+        val close = 50.0 + 10.0 * math.sin(i * 0.7) + (i % 7)
+        bar("AAPL", i).copy(open = close - 0.5, high = close + 2, low = close - 2,
+          close = close, volume = 10L + i % 4)
+      }
+      val wave1 = (0 until 30).map(mk)
+      val wave2 = (30 until 45).map(mk)
+      // bar 10 arrives twice in wave 1; the earlier arrival, far off the
+      // series, must leave no trace in the output or the state
+      val early = mk(10).copy(close = 80.0, high = 82.0, low = 78.0, volume = 99L)
+      val input = MemoryStream[Bar](spark)
+      val q = Pipeline.indicatorCascade(input.toDS())
+        .writeStream.format("memory").queryName("cascDup")
+        .outputMode("append").start()
+      input.addData(wave1.take(5) ++ Seq(early) ++ wave1.drop(5): _*)
+      q.processAllAvailable()
+      val afterWave1 = spark.table("cascDup").count()
+      input.addData(wave2: _*)
+      q.processAllAvailable()
+      q.stop()
+      assert(afterWave1 == 30, s"$afterWave1 rows for 30 distinct bars")
+
+      def key(r: Row) = r.getAs[java.sql.Timestamp]("datetime")
+      val got = spark.table("cascDup").collect().map(r => key(r) -> r.toSeq).toMap
+      val want = Pipeline.indicatorCascadeBatch((wave1 ++ wave2).toDF()
+          .select($"symbol", $"datetime", $"high", $"low", $"close", $"volume"))
+        .collect().map(r => key(r) -> r.toSeq).toMap
+      assert(got.size == 45 && want.size == 45, s"${got.size} stream rows, ${want.size} batch rows")
+      assert(got(mk(10).datetime)(2) == mk(10).close, "the earlier arrival won")
+      val diffs = want.keys.filter(k => got(k) != want(k)).toSeq.sortBy(_.getTime)
+      assert(diffs.isEmpty,
+        s"${diffs.size} rows diverge, e.g. ${diffs.headOption.map(k => (k, got(k), want(k)))}")
+    } finally {
+      spark.streams.active.foreach(_.stop())
+    }
+  }
+
   test("indicator cascade over score(decode) carries no watermark: no no-data batch, no late-row drop") {
     // no processor here runs with event time, so a watermark in front of
     // one would only schedule an empty micro-batch after every advance;
@@ -782,7 +861,7 @@ class StreamingSpec extends SparkTestBase {
     }
   }
 
-  test("w16/w17 processors fail LOUDLY on out-of-order arrival across micro-batches") {
+  test("t6/w16/w17 processors fail LOUDLY on out-of-order arrival across batches") {
     // the ordering contract is guarded, not just documented: un-gated
     // late data must kill the query with a diagnosable error, never
     // splice the rolling state silently (the batch twin would diverge)
@@ -806,9 +885,11 @@ class StreamingSpec extends SparkTestBase {
       ("ichimoku", Pipeline.ichimoku(_), first, Seq(bar("AAPL", 3)), Left(across)),
       ("pairCorrStrategy", Pipeline.pairCorrStrategy(_, "AAPL", "MSFT"),
         legs(first), legs(Seq(bar("AAPL", 3))), Left(across)),
+      ("pairsStrategy", Pipeline.pairsStrategy(_, "AAPL", "MSFT"),
+        legs(first), legs(Seq(bar("AAPL", 3))), Left(across)),
       // two bars with one timestamp land in the same micro-batch (the
-      // pairs chain cannot land one: its leg aligner keys by the full µs
-      // time, so a re-delivered minute becomes one observation)
+      // pairs chains cannot land one: their leg aligner keys by the full
+      // µs time, so a re-delivered minute becomes one observation)
       ("ichimoku", Pipeline.ichimoku(_), first, Seq(dup, dup), Left(within)),
       // two bars 1 µs apart land newest first: the guard passes them and
       // the full Pearson window takes them in µs order
