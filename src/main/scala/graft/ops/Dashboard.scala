@@ -185,8 +185,9 @@ object Dashboard {
 
   // one CTE stage per dependency depth; each stage SELECT *-extends the
   // previous so the chain mirrors the Spark column cascade exactly.
-  // Shared with [[DashboardScan]]: both implementations answer to the
-  // SAME SQL, so the gate pins them to one semantics.
+  // Shared with [[DashboardScan]], whose [[CascadeKernel]] steps the same
+  // cascade: both arms answer to the SAME SQL, so the gate pins them to
+  // one semantics.
   private[ops] val oracle: String = {
     val ctes =
       s"""c1 AS (SELECT *,

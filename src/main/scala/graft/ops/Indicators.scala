@@ -206,11 +206,10 @@ object Indicators {
     * queries (round-11 task 1 — the flagship's [[Dashboard.deepHistory]]
     * decision applied to w1-w6): at deep per-key history the per-symbol
     * WindowExec serializes onto #symbols tasks, so the query rides the
-    * key-count-independent [[DashboardScan]] replay (which computes all
-    * of ema5/15, sma, rsi, tsi, macd, macd_signal, adx in one pass) and
-    * projects its columns. Both tiers answer the SAME per-query oracle;
-    * the scan arm additionally stays gate-checked at every SF through
-    * `dashboard_cascade_scan` (identical formulas, same CascadeState).
+    * key-count-independent [[DashboardScan]] replay of [[CascadeKernel]]
+    * and projects its columns. Both tiers answer the SAME per-query
+    * oracle; the scan arm additionally stays gate-checked at every SF
+    * through `dashboard_cascade_scan` (the same kernel).
     * The gate SFs land one on each side of the threshold, so BOTH arms
     * stay oracle-covered (sf0.01 window, sf0.1+ scan).
     *

@@ -143,14 +143,14 @@ object Layout {
     * Spark jobs: size-dispatch decisions (pair-tier, codebook arm,
     * SRP geometry) used to spend a sequential count job per query build
     * (~0.1–0.3 s each at sf0.1; the ivfAdc one even paid its upstream
-    * repartition). Memoized per path exactly like the Tables schema
-    * cache (round 16): testdata and artifacts are write-once per JVM,
-    * and this holds one long of METADATA — never data, never results.
+    * repartition). Memoized per [[sourceFingerprint]] like the Tables
+    * schema cache, so a path rewritten in this JVM is counted again; it
+    * holds one long of METADATA — never data, never results.
     * Falls back to a real count if a footer is unreadable. */
   private val rowCountCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   def rowCount(spark: SparkSession, p: String): Long =
-    rowCountCache.computeIfAbsent(p, { _ =>
+    rowCountCache.computeIfAbsent(sourceFingerprint(spark, p), { _ =>
       val conf = spark.sparkContext.hadoopConfiguration
       val path = new org.apache.hadoop.fs.Path(p)
       try {
@@ -322,9 +322,7 @@ object Layout {
 
   /** Row count of a persisted artifact table via [[rowCount]] footer
     * metadata — zero jobs. The artifact must already exist (call
-    * [[ensureBucketedArtifact]] first); identity caveats are the same
-    * as the schema/rowCount caches: artifacts are fingerprint-named and
-    * write-once per JVM. */
+    * [[ensureBucketedArtifact]] first). */
   def artifactRowCount(spark: SparkSession, baseName: String,
       bucketCol: String, buckets: Int): Long = {
     val table = artifactTableName(baseName, bucketCol, buckets)

@@ -22,15 +22,13 @@ object Tables {
     * oracle stays aligned. (Egress mirrors this: Verify.egress casts
     * back to NTZ so the dumped files are naive µs on every reader.)
     */
-  /** Round-16 (guide §6, driver-side planning cost): every bare
-    * `spark.read.parquet(path)` runs a schema-inference job (footer
-    * read) BEFORE the query's own jobs — ~50-80 ms per call here, and a
-    * distributed footer-sampling job on a real multi-file table. The
-    * schema of a given parquet path is immutable for the life of this
-    * JVM (testdata and artifacts are write-once), so infer it once and
-    * pass it explicitly on every later read. Keyed per path; holds
-    * StructType metadata only (never data, never results — bench/oracle
-    * runs still compute everything from the files).
+  /** Inferred schemas, one per version of a path. A bare
+    * `spark.read.parquet(path)` runs a schema-inference job (footer read)
+    * before the query's own jobs — ~50-80 ms per call here, a distributed
+    * footer-sampling job on a real multi-file table — so it runs once per
+    * [[Layout.sourceFingerprint]] (path, leaf names, lengths and mtimes:
+    * metadata calls, no job), and a path rewritten in this JVM is read
+    * again. StructType metadata only, never data or results.
     */
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
@@ -39,8 +37,8 @@ object Tables {
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
     val path = s"$dir/$name.parquet"
-    val schema = schemaCache.computeIfAbsent(path,
-      p => spark.read.parquet(p).schema)
+    val schema = schemaCache.computeIfAbsent(Layout.sourceFingerprint(spark, path),
+      _ => spark.read.parquet(path).schema)
     val raw = spark.read.schema(schema).parquet(path)
     if (!raw.schema.fields.exists(_.dataType == TimestampNTZType)) raw
     else raw.select(raw.schema.fields.map { f =>

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ops.Core
+import graft.ops.{CascadeKernel, Core}
 import org.apache.spark.sql.{DataFrame, Dataset, KeyValueGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor, StreamingQuery, TimeMode, TimerValues, Trigger, TTLConfig}
@@ -202,30 +202,16 @@ object Pipeline {
       atr: Double, stoch_k: Option[Double], stoch_d: Option[Double],
       obv: Long, drawdown: Double)
 
-  /** Per-symbol state of [[IndicatorCascadeProcessor]], one RocksDB
-    * value: row count, the five EWMA accumulators (close spans 5/15/12/26
-    * and the MACD signal span 9), the running low/high extrema feeding the
-    * streaming T2 range-trading signal, the w12-w15 accumulators (Wilder
-    * ATR EWM, OBV running sum, running close peak), and the bounded close,
-    * high and low buffers, oldest first. */
-  final case class CascState(n: Long, e5: Double, e15: Double,
-      e12: Double, e26: Double, sig9: Double,
-      runLow: Double, runHigh: Double,
-      atr: Double, obv: Long, peak: Double,
-      closes: Array[Double], highs: Array[Double], lows: Array[Double])
-
   // state encoders are derived once per JVM: Scala-reflecting a product
   // encoder in every task's processor init cost more executor CPU than
   // the cascade's state reads
   private lazy val barEncoder = org.apache.spark.sql.Encoders.product[Bar]
-  private lazy val cascStateEncoder = org.apache.spark.sql.Encoders.product[CascState]
+  private lazy val cascStateEncoder = org.apache.spark.sql.Encoders.product[CascadeKernel.State]
   private lazy val pairLegEncoder = org.apache.spark.sql.Encoders.product[PairLegState]
   private lazy val ichiStateEncoder = org.apache.spark.sql.Encoders.product[IchiState]
 
   // the rolling frames, each read by its processor and that processor's
   // batch twin, so a stream and its twin cannot disagree on a frame
-  private final val SmaN = 20 // cascade SMA and G3's rolling mean
-  private final val RsiN = 14 // cascade RSI
   private final val ZScoreN = 20 // pairs t6 z-score
   private final val CorrN = 20 // pairs w16 Pearson
 
@@ -236,95 +222,43 @@ object Pipeline {
     Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000
 
   /** S13→indicators: the streaming twin of the batch `dashboard_cascade`
-    * window stack (round-7 verdict task 5) — per-symbol EMA5/15, SMA20,
-    * RSI14, MACD(12,26,9) computed INCREMENTALLY as bars arrive, the
-    * computation the reference's provider.py consumer re-runs client-side
-    * over its 20-row buffer on every poll (`streamlit_app.py:165-203`,
+    * window stack — per-symbol EMA5/15, SMA20, RSI14, MACD(12,26,9), the
+    * T1-T4 strategy signals, G1-G3 patterns and w12-w15 indicators,
+    * computed INCREMENTALLY as bars arrive: the computation the
+    * reference's provider.py consumer re-runs client-side over its
+    * 20-row buffer on every poll (`streamlit_app.py:165-257`,
     * `provider.py:107-113`).
     *
-    * State per symbol = ONE [[CascState]] value: the scalar recurrences
-    * plus the bounded close buffer (the S13 provider buffer widened to
-    * 25 rows, feeding the rolling SMA/RSI/G3/T4 windows) and 16-row
-    * high/low buffers. A micro-batch costs each key one state-store get
-    * and one put, whatever its bar count — the whole key's state is one
-    * tuple, as in Pregelix's vertex tuples. O(1) state per key — no window
-    * re-sort, no unbounded history; this is why the cascade streams at
-    * 100 TB/day while the batch plan's Exchange+Sort recomputes the full
-    * partition.
-    *
-    * Exactness contract (StreamingSpec pins stream-vs-batch row
-    * equality on the same frames): every arithmetic step replicates the
-    * batch operator's fold order bit-for-bit — EWMAs run the identical
-    * y = a·x + (1−a)·y recurrence as `functions/Ewma`; SMA/RSI means
-    * fold their frames oldest-to-newest exactly like WindowExec
-    * accumulates a rows-frame; RSI's row-0 gain/loss are the same
-    * synthetic 0.0 the batch CASE emits for the NULL first diff.
+    * The per-bar arithmetic is [[graft.ops.CascadeKernel]]'s, the state
+    * machine the batch scan arm ([[graft.ops.DashboardScan]]) replays
+    * too; this processor adds only the stream's concerns. State per
+    * symbol = ONE [[graft.ops.CascadeKernel.State]] value, so a
+    * micro-batch costs each key one state-store get and one put, whatever
+    * its bar count — the whole key's state is one tuple, as in Pregelix's
+    * vertex tuples. O(1) state per key — no window re-sort, no unbounded
+    * history; this is why the cascade streams at 100 TB/day while the
+    * batch plan's Exchange+Sort recomputes the full partition.
+    * StreamingSpec pins stream-vs-batch row equality, bit for bit,
+    * against [[indicatorCascadeBatch]] on the same frames.
     *
     * Ordering: rows are sorted by event time (µs) WITHIN each batch
     * before folding (micro-batch arrival order is not event order), and
     * of two bars with one event time in a batch only the later arrival
     * is folded and emitted — the sink's upsert semantics, so the output
-    * needs no dedup before the store.
-    * Cross-batch disorder is not replayed — late rows would need the
-    * batch path or a watermark-delayed emit; same contract as every
-    * incremental indicator store. The processor runs without event time
-    * and drops nothing: a late bar is folded in like any other. The full
-    * dashboard's global-window columns (support/resistance, first/last
-    * trend) are inherently whole-history and stay batch-only.
-    *
-    * Round-10 extension: the strategy signals T1/T3/T4 and patterns
-    * G1-G3 are pure functions of the same bounded buffers (the reference
-    * computes them per tick over its 20-row poll buffer,
-    * `streamlit_app.py:212-257`), so they ride this processor for free:
-    * the close buffer widens to 25 rows (G3's rolling-5-of-rolling-20
-    * slope reach), high/low gain 6-row buffers (G1/G2's lagged rolling-5
-    * extrema), and T2 — whose batch form uses the WHOLE-history
-    * support/resistance band, unbounded-following included — streams as
-    * the running-prefix variant (extrema over rows seen so far), pinned
-    * in StreamingSpec against a prefix-window batch twin rather than the
-    * whole-frame t2 oracle.
+    * needs no dedup before the store. Cross-batch disorder is not
+    * replayed: the processor runs without event time and drops nothing,
+    * so a late bar is folded in like any other (late rows would need the
+    * batch path or a watermark-delayed emit). The full dashboard's
+    * global-window columns (support/resistance, first/last trend) are
+    * whole-history and stay batch-only; T2 streams as the running-prefix
+    * band (extrema over rows seen so far), pinned against a prefix-window
+    * batch twin rather than the whole-frame t2 oracle.
     */
   class IndicatorCascadeProcessor extends StatefulProcessor[String, Bar, CascRow] {
-    // G3's reach, the deepest close frame: the rolling-5 mean of the
-    // rolling-SmaN mean's slope needs closes[t-(SmaN+4)..t] (RSI needs
-    // RsiN+1, T4's lagged rolling-20 extrema 21)
-    private val bufCap = SmaN + 5
-    // 16 = stochastic %D's reach: %K(t-2) needs highs/lows[t-15..t-2]
-    // (G1/G2's lagged rolling-5 extrema only need 6)
-    private val hlCap = 16
-    @transient private var st: org.apache.spark.sql.streaming.ValueState[CascState] = _
+    @transient private var st: org.apache.spark.sql.streaming.ValueState[CascadeKernel.State] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[CascState]("casc", cascStateEncoder, TTLConfig.NONE)
-
-    // folds over the `n` entries of `a` ending `o` before its newest
-    // (`a.dropRight(o).takeRight(n)`), as while loops on the primitive
-    // array: the collection folds box every element. Sums run oldest to
-    // newest, WindowExec's order; min/max order by
-    // `java.lang.Double.compare` (NaN largest), as Spark SQL and the
-    // collections' `Ordering[Double]` do.
-    private def sumWin(a: Array[Double], o: Int, n: Int): Double = {
-      var acc = 0.0
-      var i = a.length - o - n
-      while (i < a.length - o) { acc += a(i); i += 1 }
-      acc
-    }
-    private def minWin(a: Array[Double], o: Int, n: Int): Double = {
-      var i = a.length - o - n
-      var m = a(i)
-      while (i < a.length - o) { if (java.lang.Double.compare(a(i), m) < 0) m = a(i); i += 1 }
-      m
-    }
-    private def maxWin(a: Array[Double], o: Int, n: Int): Double = {
-      var i = a.length - o - n
-      var m = a(i)
-      while (i < a.length - o) { if (java.lang.Double.compare(a(i), m) > 0) m = a(i); i += 1 }
-      m
-    }
-
-    private def ema(span: Int, prev: Double, x: Double, seeded: Boolean): Double =
-      if (!seeded) x
-      else { val a = 2.0 / (span + 1.0); a * x + (1.0 - a) * prev }
+      st = getHandle.getValueState[CascadeKernel.State]("casc", cascStateEncoder, TTLConfig.NONE)
 
     override def handleInputRows(key: String, rows: Iterator[Bar],
         timers: TimerValues): Iterator[CascRow] = {
@@ -334,139 +268,23 @@ object Pipeline {
       // so that the output is unique per (symbol, datetime)
       val sorted = rows.map(b => (micros(b.datetime), b)).toArray.sortBy(_._1)
       if (sorted.isEmpty) return Iterator.empty
-      val batch = sorted.indices.iterator
+      val k = new CascadeKernel(Option(st.get()).getOrElse(CascadeKernel.empty))
+      val out = sorted.indices
         .filter(i => i + 1 == sorted.length || sorted(i + 1)._1 != sorted(i)._1)
-        .map(sorted(_)._2)
-      val none = Array.emptyDoubleArray
-      var s = Option(st.get()).getOrElse(CascState(0L, 0, 0, 0, 0, 0, 0, 0, 0, 0L, 0, none, none, none))
-      var buf = s.closes
-      var hb = s.highs
-      var lb = s.lows
-      val out = Array.newBuilder[CascRow]
-      for (b <- batch) {
-        val seeded = s.n > 0
-        val e5 = ema(5, s.e5, b.close, seeded)
-        val e15 = ema(15, s.e15, b.close, seeded)
-        val e12 = ema(12, s.e12, b.close, seeded)
-        val e26 = ema(26, s.e26, b.close, seeded)
-        val macd = e12 - e26
-        val sig9 = ema(9, s.sig9, macd, seeded)
-        val prevClose = if (seeded) Some(buf.last) else None
-        buf = (buf :+ b.close).takeRight(bufCap)
-        hb = (hb :+ b.high).takeRight(hlCap)
-        lb = (lb :+ b.low).takeRight(hlCap)
-        val runLow = if (seeded) math.min(s.runLow, b.low) else b.low
-        val runHigh = if (seeded) math.max(s.runHigh, b.high) else b.high
-        val total = s.n + 1
-        val sma =
-          if (total >= SmaN) Some(sumWin(buf, 0, SmaN) / SmaN)
-          else None
-        // gains/losses of the last RsiN ROWS: diffs of the last RsiN+1
-        // closes, with the symbol's first row contributing the batch
-        // CASE's synthetic 0.0 (its diff is NULL) — reachable only while
-        // the window still spans row 0 (total <= RsiN)
-        val rsi = if (total >= RsiN) {
-          var gains = 0.0
-          var losses = 0.0
-          var i = buf.length - RsiN // i = 0 only at total = RsiN: buf(0) is row 0
-          while (i < buf.length) {
-            val d = if (i == 0) 0.0 else buf(i) - buf(i - 1)
-            gains += (if (d > 0) d else 0.0)
-            losses += (if (d < 0) -d else 0.0)
-            i += 1
-          }
-          val ag = gains / RsiN
-          val al = losses / RsiN
-          if (al == 0 && ag == 0) None
-          else if (al == 0) Some(100.0)
-          else Some(100.0 - 100.0 / (1.0 + ag / al))
-        } else None
-        // T1 scalping — close vs the rolling(5) extrema of itself; the
-        // frame CONTAINS the current row, so the strict predicates are
-        // unsatisfiable and the signal is always 0 (reference quirk,
-        // preserved as-written like the batch t1)
-        val t1 = if (total >= 5) {
-          if (b.close < minWin(buf, 0, 5)) 1 else if (b.close > maxWin(buf, 0, 5)) -1 else 0
-        } else 0
-        // T2 range trading, streaming form: RUNNING support/resistance
-        // (extrema over rows seen so far; batch t2's unbounded-following
-        // band is whole-history and stays batch-only). SELL wins
-        // overlaps, same predicate order as the batch CASE.
-        val t2 =
-          if (b.close >= runHigh * 0.95) -1
-          else if (b.close <= runLow * 1.05) 1
-          else 0
-        // T3 momentum — close - close.shift(5); NULL momentum -> 0
-        val t3m =
-          if (total >= 6) Some(b.close - buf(buf.length - 6)) else None
-        val t3 = t3m.map(m => if (m > 0) 1 else if (m < 0) -1 else 0).getOrElse(0)
-        // T4 breakout — close vs YESTERDAY'S rolling(20) close extrema
-        // (lag1 of a min_periods window: defined from the 21st row on)
-        val t4 = if (total >= 21) {
-          if (b.close > maxWin(buf, 1, 20)) 1 else if (b.close < minWin(buf, 1, 20)) -1 else 0
-        } else 0
-        // G1/G2 — lagged vs current rolling(5) high/low extrema; pandas
-        // NaN comparisons are false during warm-up (total < 6)
-        val (g1, g2) = if (total >= 6) {
-          val h5 = maxWin(hb, 0, 5)
-          val l5 = minWin(lb, 0, 5)
-          val h5p = maxWin(hb, 1, 5)
-          val l5p = minWin(lb, 1, 5)
-          (h5p < h5 && l5p > l5, h5p > h5 && l5p < l5)
-        } else (false, false)
-        // G3 — rolling(5) mean of the rolling(SmaN)-mean slope > 0. The
-        // rolling means re-derive from the close buffer with the SAME
-        // oldest-to-newest fold WindowExec uses, so stream == batch
-        // bit-for-bit; first defined at total = SmaN+5 = bufCap (slope
-        // needs rm(t-1), rm needs SmaN rows, the mean needs 5 slopes)
-        val g3 = if (total >= bufCap) {
-          val rm = Array.tabulate(6)(o => sumWin(buf, o, SmaN) / SmaN)
-          var slopes = 0.0
-          var o = 4
-          while (o >= 0) { slopes += rm(o) - rm(o + 1); o -= 1 }
-          slopes / 5 > 0
-        } else false
-        // W12 ATR — Wilder ewm(alpha=1/14) over the ADX true range, with
-        // the batch row-0 quirk (no prev close -> tr = high - low)
-        val tr = prevClose match {
-          case None => b.high - b.low
-          case Some(pc) =>
-            math.max(b.high - b.low, math.max(math.abs(b.high - pc), math.abs(b.low - pc)))
+        .map { i =>
+          val b = sorted(i)._2
+          k.step(b.high, b.low, b.close, b.volume)
+          CascRow(b.symbol, b.datetime, b.close, k.ema5, k.ema15, opt(k.sma),
+            opt(k.rsi), k.macd, k.macdSignal, k.t1, k.t2, opt(k.t3Momentum), k.t3,
+            k.t4, k.g1, k.g2, k.g3, k.atr, opt(k.stochK), opt(k.stochD), k.obv,
+            k.drawdown)
         }
-        val atr = if (seeded) (1.0 / 14.0) * tr + (1.0 - 1.0 / 14.0) * s.atr else tr
-        // W13 stochastic — %K(o) from the high/low buffers at row offset
-        // o; %D = the min_periods-3 mean of the last three %K rows,
-        // folded oldest-to-newest like the batch WindowExec frame
-        def stochK(o: Int): Option[Double] =
-          if (total - o >= 14 && o < buf.length) {
-            val hh = maxWin(hb, o, 14)
-            val ll = minWin(lb, o, 14)
-            if (hh == ll) None
-            else Some(100.0 * (buf(buf.length - 1 - o) - ll) / (hh - ll))
-          } else None
-        val k0 = stochK(0)
-        val stochD = (stochK(2), stochK(1), k0) match {
-          case (Some(k2), Some(k1), Some(k)) => Some((k2 + k1 + k) / 3)
-          case _ => None
-        }
-        // W14 OBV — integer-exact signed volume flow (row 0 adds nothing)
-        val obv = s.obv + (prevClose match {
-          case Some(pc) if b.close > pc => b.volume
-          case Some(pc) if b.close < pc => -b.volume
-          case _ => 0L
-        })
-        // W15 drawdown — running close peak, one IEEE division
-        val peak = if (seeded) math.max(s.peak, b.close) else b.close
-        val drawdown = b.close / peak - 1.0
-        s = CascState(total, e5, e15, e12, e26, sig9, runLow, runHigh,
-          atr, obv, peak, buf, hb, lb)
-        out += CascRow(b.symbol, b.datetime, b.close, e5, e15, sma, rsi,
-          macd, sig9, t1, t2, t3m, t3, t4, g1, g2, g3,
-          atr, k0, stochD, obv, drawdown)
-      }
-      st.update(s)
-      out.result().iterator
+      st.update(k.state)
+      out.iterator
     }
+
+    private def opt(x: java.lang.Double): Option[Double] =
+      if (x == null) None else Some(x.doubleValue)
   }
 
   /** The streaming indicator cascade over scored bars (see
@@ -505,7 +323,7 @@ object Pipeline {
         org.apache.spark.sql.functions.abs(col("low") - pc)))
     val l1 = bars.select(col("symbol"), col("datetime"), col("close"),
       ema(col("close"), 5).as("ema5"), ema(col("close"), 15).as("ema15"),
-      mean(col("close"), SmaN).as("sma"),
+      mean(col("close"), 20).as("sma"),
       (col("close") - lag1(col("close"))).as("delta"),
       ema(col("close"), 12).as("e12"), ema(col("close"), 26).as("e26"),
       // strategy/pattern inputs (same expressions as ops/Strategies and
@@ -518,7 +336,7 @@ object Pipeline {
       lag1(rmin(col("close"), 20)).as("bk_min"),
       rmax(col("high"), 5).as("pt_h"), rmin(col("low"), 5).as("pt_l"),
       lag1(rmax(col("high"), 5)).as("pt_hp"), lag1(rmin(col("low"), 5)).as("pt_lp"),
-      mean(col("close"), SmaN).as("pt_rm"),
+      mean(col("close"), 20).as("pt_rm"),
       // w12-w15 (same expressions as ops/Indicators w12_atr..w15_drawdown)
       col("volume"),
       Ewma.alpha(tr, 1.0 / 14, P, O).as("atr"),
@@ -529,7 +347,7 @@ object Pipeline {
     val stochK = when(col("st_hh") === col("st_ll"), lit(null))
       .otherwise(lit(100.0) * (col("close") - col("st_ll")) / (col("st_hh") - col("st_ll")))
     val l2 = l1.select(col("*"), (col("e12") - col("e26")).as("macd"),
-      mean(gain, RsiN).as("ag"), mean(loss, RsiN).as("al"),
+      mean(gain, 14).as("ag"), mean(loss, 14).as("al"),
       (col("pt_rm") - lag1(col("pt_rm"))).as("pt_slope"),
       stochK.as("stoch_k"),
       sum(when(col("delta") > 0, col("volume"))

@@ -95,6 +95,28 @@ class LayoutSpec extends SparkTestBase {
     } finally deleteRec(Paths.get(out).getParent)
   }
 
+  test("metadata caches follow a rewritten path: row count and schema are read again") {
+    // Layout.rowCount and the Tables schema cache serve size-dispatch and
+    // read decisions; a path overwritten in the same JVM must not answer
+    // with its old footer count or its old schema
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("graft-recache")
+    val path = dir.resolve("t.parquet").toString
+    try {
+      Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.parquet(path)
+      assert(Layout.rowCount(spark, path) == 2L)
+      assert(graft.sources.Tables(spark, dir.toString, "t").columns.toSeq == Seq("id", "v"))
+
+      Seq((1L, "a", 0.5), (2L, "b", 1.5), (3L, "c", 2.5)).toDF("id", "v", "score")
+        .write.mode("overwrite").parquet(path)
+      assert(Layout.rowCount(spark, path) == 3L, "row count served from the old file")
+      val t = graft.sources.Tables(spark, dir.toString, "t")
+      assert(t.columns.toSeq == Seq("id", "v", "score"), "schema served from the old file")
+      assert(t.agg(sum("score")).head().getDouble(0) == 4.5)
+    } finally deleteRec(dir)
+  }
+
   test("writeBucketed: co-bucketed join plans with zero shuffle") {
     val a = "graft_bucket_a"; val b = "graft_bucket_b"
     // broadcast would win at spec scale and hide the layout; the claim

@@ -21,6 +21,43 @@ class StreamingSpec extends SparkTestBase {
   private def rec(sym: String, dt: String, o: Double, c: Double): String =
     s"""{"symbol":"$sym","Datetime":"$dt","Open":$o,"High":${math.max(o, c)},"Low":${math.min(o, c)},"Close":$c,"Volume":10,"Dividends":0.0,"Stock_Splits":0.0}"""
 
+  /** Deterministic non-monotone closes: exercises RSI gain/loss
+    * branches, SMA warm-up, and both MACD signs. */
+  private def cascBar(sym: String, i: Int): Bar = {
+    val close = 50.0 + 10.0 * math.sin(i * 0.7) + (i % 7)
+    // high/low bands move INDEPENDENTLY of close (and of each other),
+    // otherwise G1/G2's "rising highs AND falling lows" conjunction
+    // is unsatisfiable and the pattern assertions go vacuous
+    // volatility spikes (every 11th bar engulfs: new 5-row high AND
+    // new 5-row low on the same row) make G1 reachable; G2 needs the
+    // spike's extrema to then FALL OUT of both windows together
+    // (spikes start at i=7 — a spike on row 0 would widen the running
+    // support/resistance band before T2 can ever touch it)
+    val spike = if (i % 11 == 7) 25.0 else 0.0
+    bar(sym, i).copy(open = close - 0.5,
+      high = close + 1 + 3.0 * math.sin(i * 1.3) + (i % 3) + spike,
+      low = close - 1 - 3.0 * math.cos(i * 0.9) - (i % 5) - spike,
+      close = close, volume = 10L + i % 4)
+  }
+
+  /** 40 [[cascBar]]s per symbol; the last symbol's last bar has a NaN
+    * close (a wire `"Close":NaN` decodes to one), which Spark SQL orders
+    * above every number: `NaN > 0` and `NaN >= x` hold. */
+  private def cascBars(syms: Seq[String]): Seq[Bar] =
+    for (sym <- syms; i <- 0 until 40) yield
+      if (sym == syms.last && i == 39) cascBar(sym, i).copy(close = Double.NaN)
+      else cascBar(sym, i)
+
+  /** Equality in which NaN equals NaN, as in Spark SQL, through the
+    * tuples, options and row sequences the cascade cases compare. */
+  private def same(a: Any, b: Any): Boolean = (a, b) match {
+    case (x: Double, y: Double) => x == y || (x.isNaN && y.isNaN)
+    case (x: Seq[_], y: Seq[_]) => x.length == y.length && x.zip(y).forall { case (u, v) => same(u, v) }
+    case (x: Product, y: Product) => x.productArity == y.productArity &&
+      x.productIterator.zip(y.productIterator).forall { case (u, v) => same(u, v) }
+    case _ => a == b
+  }
+
   test("S6 decode: malformed rows silently dropped, schema-first") {
     val out = Pipeline.score(Pipeline.decode(Seq(
       rec("AAPL", "2024-01-01 10:00:00", 1.0, 2.0),
@@ -414,25 +451,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("streaming indicator cascade equals the batch window cascade on the same frames") {
     try {
-      // deterministic non-monotone closes: exercises RSI gain/loss
-      // branches, SMA warm-up, and both MACD signs
-      def mkBar(sym: String, i: Int): Bar = {
-        val close = 50.0 + 10.0 * math.sin(i * 0.7) + (i % 7)
-        // high/low bands move INDEPENDENTLY of close (and of each other),
-        // otherwise G1/G2's "rising highs AND falling lows" conjunction
-        // is unsatisfiable and the pattern assertions go vacuous
-        // volatility spikes (every 11th bar engulfs: new 5-row high AND
-        // new 5-row low on the same row) make G1 reachable; G2 needs the
-        // spike's extrema to then FALL OUT of both windows together
-        // (spikes start at i=7 — a spike on row 0 would widen the running
-        // support/resistance band before T2 can ever touch it)
-        val spike = if (i % 11 == 7) 25.0 else 0.0
-        bar(sym, i).copy(open = close - 0.5,
-          high = close + 1 + 3.0 * math.sin(i * 1.3) + (i % 3) + spike,
-          low = close - 1 - 3.0 * math.cos(i * 0.9) - (i % 5) - spike,
-          close = close, volume = 10L + i % 4)
-      }
-      val bars = for (sym <- Seq("AAPL", "MSFT"); i <- 0 until 40) yield mkBar(sym, i)
+      val bars = cascBars(Seq("AAPL", "MSFT"))
 
       val input = MemoryStream[Bar](spark)
       val q = Pipeline.indicatorCascade(input.toDS())
@@ -483,13 +502,14 @@ class StreamingSpec extends SparkTestBase {
       val batchInds = batchRows.map(r => key(r) -> inds(r)).toMap
 
       assert(streamed.size == 80 && batch.size == 80)
-      // bit-exact row equality: the incremental recurrences replicate the
-      // batch window folds' accumulation order, so no tolerance is needed
-      val diffs = batch.keys.filter(k => streamed(k) != batch(k))
+      // bit-exact row equality (NaN equal to NaN): the incremental
+      // recurrences replicate the batch window folds' accumulation order,
+      // so no tolerance is needed
+      val diffs = batch.keys.filter(k => !same(streamed(k), batch(k)))
       assert(diffs.isEmpty,
         s"${diffs.size} rows diverge, e.g. ${diffs.headOption.map(k => (k, streamed(k), batch(k)))}")
       // strategies + patterns: stream == batch on the same frames
-      val sigDiffs = batchSigs.keys.filter(k => streamedSigs(k) != batchSigs(k))
+      val sigDiffs = batchSigs.keys.filter(k => !same(streamedSigs(k), batchSigs(k)))
       assert(sigDiffs.isEmpty,
         s"${sigDiffs.size} signal rows diverge, e.g. ${sigDiffs.headOption.map(k => (k, streamedSigs(k), batchSigs(k)))}")
       // non-vacuity: each signal family actually fires somewhere (the
@@ -505,7 +525,7 @@ class StreamingSpec extends SparkTestBase {
         "no triangle pattern fired")
       assert(batchSigs.values.exists(_._8), "g3 never fired")
       // w12-w15: stream == batch bit-exact, and each actually engages
-      val indDiffs = batchInds.keys.filter(k => streamedInds(k) != batchInds(k))
+      val indDiffs = batchInds.keys.filter(k => !same(streamedInds(k), batchInds(k)))
       assert(indDiffs.isEmpty,
         s"${indDiffs.size} w12-w15 rows diverge, e.g. ${indDiffs.headOption.map(k => (k, streamedInds(k), batchInds(k)))}")
       assert(batchInds.values.forall(_._1 >= 0), "negative atr")
@@ -517,11 +537,56 @@ class StreamingSpec extends SparkTestBase {
     }
   }
 
+  test("indicator cascade state survives a save and load at every bar: one bar per micro-batch ≡ batch") {
+    // each micro-batch carries one bar per symbol, so every bar's step
+    // starts from the value the state store decoded: the ring positions
+    // and NULL markers must round-trip. FLAT's flat run makes %K and RSI
+    // NULL mid-series, and its NaN close then stays in the close ring
+    try {
+      val flat = (0 until 40).map { i =>
+        val b = cascBar("FLAT", i)
+        if (i >= 12 && i < 30) b.copy(open = 50.0, high = 50.0, low = 50.0, close = 50.0)
+        else if (i == 33) b.copy(close = Double.NaN)
+        else b
+      }
+      val bars = cascBars(Seq("AAPL", "MSFT")) ++ flat
+      val input = MemoryStream[Bar](spark)
+      val q = Pipeline.indicatorCascade(input.toDS())
+        .writeStream.format("memory").queryName("cascPerBar")
+        .outputMode("append").start()
+      for (i <- 0 until 40) {
+        input.addData(bars.filter(_.datetime == bar("AAPL", i).datetime): _*)
+        q.processAllAvailable()
+      }
+      val batches = q.recentProgress.count(_.numInputRows > 0)
+      q.stop()
+      assert(batches == 40, s"$batches micro-batches")
+
+      def key(r: Row) = (r.getAs[String]("symbol"), r.getAs[java.sql.Timestamp]("datetime"))
+      val got = spark.table("cascPerBar").collect().map(r => key(r) -> r).toMap
+      val want = Pipeline.indicatorCascadeBatch(bars.toDF()
+          .select($"symbol", $"datetime", $"high", $"low", $"close", $"volume"))
+        .collect().map(r => key(r) -> r).toMap
+      assert(got.size == 120 && want.size == 120, s"${got.size} stream rows, ${want.size} batch rows")
+      val diffs = want.keys.filter(k => !same(got(k).toSeq, want(k).toSeq)).toSeq.sortBy(_._2.getTime)
+      assert(diffs.isEmpty,
+        s"${diffs.size} rows diverge, e.g. ${diffs.headOption.map(k => (k, got(k), want(k)))}")
+      // not vacuous: a NULL %K and RSI after the warm-up, and the NaN in
+      // a rolling mean
+      val flatRows = want.collect { case ((sym, _), r) if sym == "FLAT" => r }
+      assert(flatRows.exists(r => r.isNullAt(r.fieldIndex("stoch_k")) && !r.isNullAt(r.fieldIndex("sma"))))
+      assert(flatRows.exists(r => r.isNullAt(r.fieldIndex("rsi")) && !r.isNullAt(r.fieldIndex("sma"))))
+      assert(flatRows.exists(r => !r.isNullAt(r.fieldIndex("sma")) && r.getAs[Double]("sma").isNaN))
+    } finally {
+      spark.streams.active.foreach(_.stop())
+    }
+  }
+
   test("indicator cascade keeps one RocksDB state row per symbol") {
-    // the scalar recurrences and the three bounded buffers are one
-    // CascState value, so a micro-batch costs each key one state get and
-    // one put; a split layout (list buffers beside a scalar value) would
-    // report several rows per key here
+    // the scalar recurrences and the bounded rings are one
+    // CascadeKernel.State value, so a micro-batch costs each key one
+    // state get and one put; a split layout (list buffers beside a
+    // scalar value) would report several rows per key here
     try {
       val keys = 50
       val input = MemoryStream[Bar](spark)
